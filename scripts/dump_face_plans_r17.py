@@ -25,10 +25,11 @@ def formatted(df) -> str:
     )
 
 
-def subtree_semantic_pairs(spark, sf_dir):
-    """The intra-cell pair subtree of semantic_dedup (the piece VERDICT
-    r16 ask #1 targets), isolated: quantizer + cell assign + pair
-    enumeration at the face's parameters."""
+def subtree_semantic_cells(spark, sf_dir):
+    """semantic_dedup's per-cell subtree, isolated: quantizer + cell
+    assign + the grouped kernel at the face's parameters — the
+    components kernel where the checkout has it, else the intra-cell
+    pair enumeration (grouped matmul, or the equi-self-join before it)."""
     from pyspark.sql import functions as F
 
     from stock_price_prediction_using_stream_and_batch_processing_spark.operators import similarity
@@ -37,8 +38,9 @@ def subtree_semantic_pairs(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
     assigned, _ = similarity.ivf_build(e, 64, 16, "embedding", 42, max_iter=8)
     cell = assigned.select(F.col("vec_id"), F.col("embedding"), "_cell")
-    if hasattr(similarity, "_cell_threshold_pairs"):
-        return similarity._cell_threshold_pairs(cell, 0.4, "vec_id", "embedding")
+    for kernel in ("_cell_components", "_cell_threshold_pairs"):
+        if hasattr(similarity, kernel):
+            return getattr(similarity, kernel)(cell, 0.4, "vec_id", "embedding")
     from stock_price_prediction_using_stream_and_batch_processing_spark.functions import vectors
 
     a = cell.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"), "_cell")
@@ -52,7 +54,7 @@ def subtree_semantic_pairs(spark, sf_dir):
 
 
 SUBTREES = {
-    "semantic_dedup_cell_pairs": subtree_semantic_pairs,
+    "semantic_dedup_cells": subtree_semantic_cells,
 }
 
 

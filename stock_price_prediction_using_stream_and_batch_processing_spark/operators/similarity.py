@@ -140,32 +140,51 @@ def ivf_build(
     from pyspark.ml.functions import array_to_vector
 
     sample = corpus.sample(fraction=sample_fraction, seed=seed) if sample_fraction < 1.0 else corpus
-    train = sample.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
+    # NULL embeddings cannot train a centroid (array_to_vector fails on
+    # NULL); they still get a row below, with a NULL cell
+    train = sample.filter(F.col(vec_col).isNotNull()).select(
+        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    )
     km = KMeans(k=n_cells, seed=seed, featuresCol="features", maxIter=max_iter).fit(train)
     centroids = np.stack([np.asarray(c) for c in km.clusterCenters()])
     assigned = assign_cells(corpus, centroids, vec_col)
     return assigned, centroids
 
 
+def _cell_scores(vec_col: str, centroids: np.ndarray):
+    """``array<double>`` of ``||c||² − 2·v·c`` per centroid, in centroid
+    order. Each centroid rides the plan as ONE array literal
+    (``vectors.const_vector``) and the squared norms as one more; a
+    single ``transform`` over the centroid array reuses ``vectors.dot``,
+    so each score is the same double-by-double fold it always was —
+    O(k) literal expressions instead of O(k·dim)."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    norms2 = vectors.const_vector([np.dot(c, c) for c in cents])
+    cells = F.array(*[vectors.const_vector(c) for c in cents])
+    return F.transform(cells, lambda c, i: norms2[i] - 2.0 * vectors.dot(vec_col, c))
+
+
 def nearest_cell_expr(vec_col: str, centroids: np.ndarray):
     """argmin over cells of squared L2 distance, as a pure column
     expression: ||v-c||² = ||v||² - 2·v·c + ||c||²; ||v||² is constant
-    across cells, so argmin of (||c||² - 2·v·c) suffices. Centroids ride
-    the plan as literals (catalyst constant-folds the per-cell norms)."""
-    scores = [
-        (float(np.dot(c, c)) - 2.0 * vectors.dot_literal(vec_col, c.tolist())).alias(f"_s{i}")
-        for i, c in enumerate(centroids)
-    ]
-    arr = F.array(*scores)
+    across cells, so argmin of (||c||² - 2·v·c) suffices. First index
+    wins ties; a NULL embedding null-propagates to a NULL cell."""
+    arr = _cell_scores(vec_col, centroids)
     return F.array_position(arr, F.array_min(arr)).cast("int") - 1
 
 
-# literal-folded assignment carries k*dim literals in the plan;
-# expression assembly + codegen dominate past a few hundred cells
-# (measured 0.4 s @ 40 cells vs ~20 s @ 566 on identical data —
-# scripts/semdedup_cell_probe.py), so larger quantizers switch to the
-# Arrow-batched matrix path below.
-_LITERAL_CELL_MAX = 256
+# Crossover of the two assignment paths, re-measured once centroids
+# became O(k) literal expressions (4-vCPU host, dim 64, assignment plus
+# one sum action, best of 2). Expression assembly no longer dominates
+# the literal path; its per-row score fold does (an interpreted
+# higher-order function: k·dim lambda calls per row). At 16 cells the
+# paths tie on 450 rows (0.56 vs 0.50 s) and the matrix path wins from
+# 5k rows (0.82 vs 0.45 s; 20k rows: 1.04 vs 0.44 s). From 32 cells it
+# wins at every size measured (64 cells: 0.59 vs 0.31 s at 450 rows,
+# 2.05 vs 0.42 s at 20k; 512 cells at 20k: 18.5 vs 0.52 s). So the
+# literal path stays only up to 16 cells: there it ties on small
+# corpora, and it keeps those plans free of a Python boundary.
+_LITERAL_CELL_MAX = 16
 
 
 def nearest_cell_matrix(vec_col: str, centroids: np.ndarray):
@@ -220,9 +239,9 @@ def nearest_cell_matrix(vec_col: str, centroids: np.ndarray):
 
 def assign_cells(df: DataFrame, centroids: np.ndarray, vec_col: str, out: str = "_cell") -> DataFrame:
     """Nearest-centroid cell assignment with the scale-appropriate
-    physical strategy: literal-folded native expressions while the
-    plan stays small (k <= _LITERAL_CELL_MAX — zero Python, whole-stage
-    codegen), the broadcast-matrix pandas UDF beyond it. One policy
+    physical strategy: literal-folded native expressions for small
+    quantizers (k <= _LITERAL_CELL_MAX — zero Python), the
+    broadcast-matrix pandas UDF beyond it. One policy
     seam so every IVF consumer (semantic dedup, incremental semantic
     dedup, ivf_topk) picks up the ceiling fix."""
     k = len(centroids)
@@ -257,11 +276,7 @@ def ivf_topk(
     assigned, centroids = ivf_build(corpus, dim, n_cells, vec_col, seed)
     # per-query distances to every centroid -> n_probe nearest cells
     qcols = queries.select(F.col(query_id), F.col(vec_col).alias("_qv"))
-    cell_scores = [
-        (float(np.dot(c, c)) - 2.0 * vectors.dot_literal("_qv", c.tolist())).alias(f"_s{i}")
-        for i, c in enumerate(centroids)
-    ]
-    qcells = qcols.withColumn("_scores", F.array(*cell_scores)).withColumn(
+    qcells = qcols.withColumn("_scores", _cell_scores("_qv", centroids)).withColumn(
         "_cell",
         F.explode(
             F.slice(
@@ -286,83 +301,115 @@ def ivf_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _cell_threshold_pairs(
+def _union_min(parent: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Union-find over the edges ``(a[i], b[i])`` by hooking and pointer
+    jumping, vectorized: each round hooks the larger root of every
+    still-split edge onto the smaller one, then jumps every pointer to
+    its root. Pointers only ever go to smaller nodes, so a root is its
+    component's minimum; returns each node's root."""
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            return parent
+        np.minimum.at(parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _cell_components(
     cell: DataFrame,
     threshold: float,
     id_col: str,
     vec_col: str,
     cell_col: str = "_cell",
 ) -> DataFrame:
-    """Intra-cell cosine-threshold pairs — all ``(id_a, id_b)`` with
-    ``id_a < id_b``, same ``cell_col`` value, cosine >= threshold — as
-    ONE grouped-matmul pass (applyInPandas per cell) instead of the
-    equi-self-join + interpreted higher-order dot fold per candidate
-    pair it replaces (r17, VERDICT r16 ask #1; guide §4.2). The input
-    shuffles ONCE by cell (the self-join shuffled BOTH sides and then
-    materialized the k² candidate rows with two embedding copies each
-    before the per-pair filter); each cell's pairs come from a single
-    ``U @ Uᵀ`` BLAS matmul over unit rows plus an upper-triangle mask.
+    """``(id_col, sem_cluster_id)`` for every row of ``cell``: the min id
+    reachable through cosine >= ``threshold`` pairs WITHIN the row's
+    ``cell_col`` value. ONE grouped pass (applyInPandas per cell): the
+    input shuffles once by cell; each cell's pairs come from a single
+    ``U @ Uᵀ`` BLAS matmul over unit rows (upper triangle), and a
+    union-find over those pairs labels every row of the cell. No pair
+    frame, no component rounds, no join back to the corpus.
 
     Per-cell memory is O(cell_size × dim + cell_size²) — exactly the
     quadratic term SemDeDup's cell policy already bounds
     (``target_cell_size`` / ``max_cell_pairs_side``; see
     ``semantic_dedup``). NUMERIC EQUIVALENCE to the higher-order-fold
-    form is the ``threshold_pairs_matrix`` argument: summation-order
-    differences are O(dim·ulp) ≈ 1e-14 relative, the registered
+    pair form is the ``threshold_pairs_matrix`` argument: summation-
+    order differences are O(dim·ulp) ≈ 1e-14 relative, the registered
     fixtures' measured |cosine − threshold| margins are ~1e-5 — pinned
-    with a pair-set parity test in tests/test_similarity.py.
+    with a component parity test in tests/test_similarity.py.
+
+    Union-find nodes are id VALUES: a duplicated id inside a cell is one
+    node. Ids must be unique across the corpus — a duplicate split
+    over two cells is two nodes — and non-NULL: a NULL id raises,
+    naming its cell.
 
     Edge semantics: a NULL ``cell_col`` group (NULL embeddings
     null-propagate through cell assignment) and NULL embeddings inside
-    a group form no pairs — identical to the join form, where
-    cosine(NULL, ·) is NULL and fails the >= filter. A ZERO-NORM
-    embedding raises, naming the id: the join form's 0/0 cosine is NaN,
-    which Spark's NaN-greatest comparison semantics would have PASSED
-    through the >= filter — an accident of ordering semantics, not a
-    contract; the matmul path refuses the degenerate input loudly
-    (same posture as ``threshold_pairs_matrix``, judge ADVICE r16)."""
+    a group form no pairs — identical to a join form, where
+    cosine(NULL, ·) is NULL and fails the >= filter — so those rows are
+    their own cluster. Ragged embedding lengths within a cell raise; a
+    ZERO-NORM embedding raises, naming the id: a join form's 0/0 cosine
+    is NaN, which Spark's NaN-greatest comparison semantics would have
+    PASSED through the >= filter — an accident of ordering semantics,
+    not a contract; the matmul path refuses the degenerate input loudly
+    (same posture as ``threshold_pairs_matrix``)."""
     import pandas as pd  # noqa: F811 — resolves via __globals__ on executors
+    from pyspark.sql.types import StructField, StructType
 
-    id_type = cell.schema[id_col].dataType.simpleString()
+    id_field = cell.schema[id_col]
+    schema = StructType([id_field, StructField("sem_cluster_id", id_field.dataType)])
     thr = float(threshold)
 
-    def pairs_of_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": pd.Series([], dtype=object),
-                              "id_b": pd.Series([], dtype=object)})
+    def components_of_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf[id_col]
+        if ids.isna().any():
+            c = pdf[cell_col].iloc[0]
+            raise ValueError(
+                f"semantic_dedup: NULL {id_col} in cell "
+                f"{'NULL' if pd.isna(c) else c} ({int(ids.isna().sum())} such "
+                "row(s)) — ids must be unique and non-NULL across the corpus"
+            )
+        # one node per distinct id, numbered in id order: a component's
+        # root (its smallest node) is its min id
+        node, uniq = pd.factorize(ids, sort=True)
+        root = np.arange(len(uniq))
         vals = pdf[vec_col].tolist()
         keep = [i for i, v in enumerate(vals) if v is not None]
-        if len(keep) < 2:
-            return empty
-        ids = pdf[id_col].to_numpy()[keep]
-        dims = {len(vals[i]) for i in keep}
-        if len(dims) > 1:
-            raise ValueError(
-                f"semantic_dedup: ragged embedding lengths {sorted(dims)} "
-                f"within one cell (e.g. {id_col}={ids[0]}) — fix the "
-                "embedding column before deduplicating"
-            )
-        m = np.asarray([vals[i] for i in keep], dtype=np.float64)
-        norms = np.linalg.norm(m, axis=1)
-        zero = np.nonzero(norms == 0.0)[0]
-        if len(zero):
-            raise ValueError(
-                f"semantic_dedup: zero-norm embedding at "
-                f"{id_col}={ids[zero[0]]} ({len(zero)} such row(s) in its "
-                "cell) — cosine is undefined; filter or re-embed "
-                "degenerate vectors first"
-            )
-        u = m / norms[:, None]
-        s = u @ u.T
-        mask = (s >= thr) & (ids[:, None] < ids[None, :])
-        r, c = np.nonzero(mask)
-        if len(r) == 0:
-            return empty
-        return pd.DataFrame({"id_a": ids[r], "id_b": ids[c]})
+        if len(keep) >= 2:
+            kept_ids = ids.to_numpy()[keep]
+            dims = {len(vals[i]) for i in keep}
+            if len(dims) > 1:
+                raise ValueError(
+                    f"semantic_dedup: ragged embedding lengths {sorted(dims)} "
+                    f"within one cell (e.g. {id_col}={kept_ids[0]}) — fix the "
+                    "embedding column before deduplicating"
+                )
+            m = np.asarray([vals[i] for i in keep], dtype=np.float64)
+            norms = np.linalg.norm(m, axis=1)
+            zero = np.nonzero(norms == 0.0)[0]
+            if len(zero):
+                raise ValueError(
+                    f"semantic_dedup: zero-norm embedding at "
+                    f"{id_col}={kept_ids[zero[0]]} ({len(zero)} such row(s) in its "
+                    "cell) — cosine is undefined; filter or re-embed "
+                    "degenerate vectors first"
+                )
+            u = m / norms[:, None]
+            r, c = np.nonzero(np.triu(u @ u.T >= thr, 1))
+            kept_node = node[keep]
+            root = _union_min(root, kept_node[r], kept_node[c])
+        return pd.DataFrame({id_col: ids, "sem_cluster_id": np.asarray(uniq)[root[node]]})
 
     return (
         cell.select(id_col, vec_col, cell_col)
         .groupBy(cell_col)
-        .applyInPandas(pairs_of_cell, f"id_a {id_type}, id_b {id_type}")
+        .applyInPandas(components_of_cell, schema)
     )
 
 
@@ -387,13 +434,21 @@ def semantic_dedup(
     Returns one row per corpus vector:
     ``(id_col, sem_cluster_id, keep)`` where ``sem_cluster_id`` is the
     min reachable id through intra-cell duplicate pairs (own id for
-    uniques) and ``keep`` marks the representative.
+    uniques and for NULL embeddings) and ``keep`` marks the
+    representative. Ids must be unique and non-NULL across the corpus
+    (a NULL id raises, naming its cell).
 
-    Scale shape: the quadratic term is PER CELL — at 100 TB the corpus
-    is stored bucketed by cell and each cell's pair generation is one
-    grouped BLAS matmul over that cell's rows (``_cell_threshold_pairs``
-    — one shuffle of the corpus by cell key), never an all-pairs
-    shuffle.
+    Components are resolved PER CELL, inside the same grouped kernel
+    that finds the pairs (``_cell_components``: one ``U @ Uᵀ`` matmul,
+    then union-find over that cell's pairs, one label per row). That is
+    exact, not an approximation of a global pass: every pair joins two
+    rows of the same cell, so every edge — and with it every connected
+    component — lies inside one cell, and a per-cell union-find sees
+    the whole component. A corpus-wide component pass over the same
+    pairs (plus the join back to the corpus) would return the same
+    labels at the cost of its rounds of Spark jobs. The quadratic term
+    is per cell: at 100 TB the corpus is stored bucketed by cell, one
+    shuffle of the corpus by cell key, never an all-pairs shuffle.
 
     CELL-COUNT POLICY (measured — scripts/semdedup_cell_probe.py,
     SCALE.md r15): the SemDeDup paper's ``n_cells ~ sqrt(N)`` keeps
@@ -407,17 +462,10 @@ def semantic_dedup(
     the quantizer fit dominates (small corpora). Real k-means cells
     skew 2–8x over the mean; ``max_cell_pairs_side`` caps a
     degenerate cell loudly (same posture as the LSH bucket cap in
-    near-dup dedup: a loud bound beats a silent k² blowup). The
-    literal-folded assignment ceiling (~20 s of expression assembly @
-    566 cells, measured) is handled by ``assign_cells``: past
-    ``_LITERAL_CELL_MAX`` cells assignment switches automatically to
-    the Arrow-batched broadcast-centroid matrix path
+    near-dup dedup: a loud bound beats a silent k² blowup). Past
+    ``_LITERAL_CELL_MAX`` cells ``assign_cells`` switches to the
+    Arrow-batched broadcast-centroid matrix path
     (``nearest_cell_matrix``), parity-pinned against the literal form.
-    Components run through the shared policy seam
-    (dedup.resolve_components "auto"): O(diameter) propagation for the
-    clique-shaped families duplicate groups mostly are, pointer-
-    doubling fallback so a chain-shaped family costs O(log diameter)
-    rounds instead of aborting.
 
     Cross-cell duplicate pairs are deliberately missed — that is the
     SemDeDup approximation. The exact-oracle face
@@ -437,8 +485,6 @@ def semantic_dedup(
     intra-cell recall (certified downstream by the invariant faces)
     for ~linear fit-cost savings. Default keeps MLlib's 20.
     """
-    from . import dedup
-
     if target_cell_size is not None:
         n = corpus.count()
         n_cells = max(1, min(n, -(-n // target_cell_size)))
@@ -458,23 +504,8 @@ def semantic_dedup(
                 f"{max_cell_pairs_side}; raise n_cells (SemDeDup uses "
                 "~sqrt(N) cells) or the cap"
             )
-    # r17 (VERDICT r16 ask #1, guide §4.2): the intra-cell pair
-    # enumeration is one grouped BLAS matmul per cell — the equi-self-
-    # join + interpreted higher-order dot per candidate pair it
-    # replaces shuffled the embedding payload twice and materialized k²
-    # candidate rows per cell before filtering (pair-set parity and the
-    # margin-vs-rounding-band argument pinned in tests/test_similarity)
-    pairs = _cell_threshold_pairs(cell, threshold, id_col, vec_col)
-    comps = dedup.resolve_components(pairs)  # (doc_id, cluster_id)
-    return (
-        corpus.select(F.col(id_col))
-        .join(comps, F.col(id_col) == F.col("doc_id"), "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("cluster_id"), F.col(id_col)).alias("sem_cluster_id"),
-        )
-        .withColumn("keep", F.col(id_col) == F.col("sem_cluster_id"))
-    )
+    comps = _cell_components(cell, threshold, id_col, vec_col)
+    return comps.withColumn("keep", F.col(id_col) == F.col("sem_cluster_id"))
 
 
 def incremental_semantic_dedup(

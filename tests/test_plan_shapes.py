@@ -311,6 +311,22 @@ def test_cell_assign_face_runs_matrix_path(spark):
     assert "Join" not in plan
 
 
+def test_semantic_dedup_is_one_grouped_kernel_no_join(spark):
+    # Pairs AND components are resolved inside one grouped per-cell
+    # kernel: exactly one FlatMapGroupsInPandas, no join back onto the
+    # corpus and no component rounds in the returned plan.
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import similarity
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources.tables import load_table
+
+    e = load_table(spark, SF, "embeddings").filter(F.col("vec_id") % 2 == 0)
+    plan = (
+        similarity.semantic_dedup(e, threshold=0.4, dim=64, n_cells=16, kmeans_max_iter=8)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "Join" not in plan, plan
+
+
 def test_parse_ticks_parses_json_once(spark):
     """r17: the malformed-row filter must not push below the parse
     projection and re-parse the wire JSON per checked field (the

@@ -516,7 +516,7 @@ def test_threshold_pairs_matrix_edges(spark):
         similarity.threshold_pairs_matrix(ragged, 0.5)
 
 
-# --- r17: grouped per-cell matmul pair enumeration (_cell_threshold_pairs) ---
+# --- per-cell components kernel (_cell_components) and its reference ---
 
 
 def _hof_cell_pairs(cell, thr):
@@ -530,44 +530,125 @@ def _hof_cell_pairs(cell, thr):
     )
 
 
+def _pairs_components_reference(cell, thr):
+    """The form the per-cell kernel replaced: intra-cell pairs (the
+    equi-self-join + higher-order cosine) -> dedup.resolve_components
+    -> left join back onto every row, own id where no pair reached."""
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup
+
+    comps = dedup.resolve_components(_hof_cell_pairs(cell, thr))
+    return (
+        cell.select("vec_id")
+        .join(comps, F.col("vec_id") == F.col("doc_id"), "left")
+        .select("vec_id", F.coalesce(F.col("cluster_id"), F.col("vec_id")).alias("sem_cluster_id"))
+        .withColumn("keep", F.col("vec_id") == F.col("sem_cluster_id"))
+    )
+
+
+def _kernel(cell, thr):
+    return similarity._cell_components(cell, thr, "vec_id", "embedding")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _chain(ids, dim=DIM):
+    """A chain-shaped family: consecutive vectors 60 degrees apart
+    (cosine 0.5), every other pair >= 120 degrees apart (cosine <= -0.5),
+    so only the chain's links clear a 0.3 or 0.4 threshold."""
+    out = []
+    for k, i in enumerate(ids):
+        v = np.zeros(dim)
+        v[0], v[1] = np.cos(k * np.pi / 3), np.sin(k * np.pi / 3)
+        out.append((i, v.tolist()))
+    return out
+
+
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_cell_threshold_pairs_parity_with_hof_join(spark, sf_dir):
-    """The grouped-matmul intra-cell pair set must equal the equi-self-
-    join + higher-order-dot form it replaced (r17 — same margin-vs-
-    rounding-band argument as threshold_pairs_matrix, here pinned on
-    the exact cell layout semantic_dedup runs)."""
+    """The per-cell kernel's components must equal the components of the
+    equi-self-join + higher-order-dot pair set it replaced, resolved by
+    resolve_components and left-joined back — pinned on the exact cell
+    layout semantic_dedup runs (same margin-vs-rounding-band argument as
+    threshold_pairs_matrix for the pair set inside each cell)."""
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
     assigned, _ = similarity.ivf_build(e, 64, 16, "embedding", 42, max_iter=8)
-    cell = assigned.select("vec_id", "embedding", "_cell")
-    fast = {
-        (r.id_a, r.id_b)
-        for r in similarity._cell_threshold_pairs(cell, 0.4, "vec_id", "embedding").collect()
-    }
-    slow = {(r.id_a, r.id_b) for r in _hof_cell_pairs(cell, 0.4).collect()}
-    assert fast == slow and len(fast) > 0
+    cell = assigned.select("vec_id", "embedding", "_cell").localCheckpoint()
+    fast = {r.vec_id: r.sem_cluster_id for r in _kernel(cell, 0.4).collect()}
+    slow = {r.vec_id: r.sem_cluster_id for r in _pairs_components_reference(cell, 0.4).collect()}
+    assert fast == slow
+    assert sum(v != k for k, v in fast.items()) > 0
+
+
+def test_semantic_dedup_parity_with_pairs_components_form(spark):
+    """semantic_dedup (components resolved inside the per-cell kernel)
+    against the pairs -> resolve_components -> left-join form on the
+    SAME quantizer (ivf_build is seeded): two seeded corpora at
+    thresholds 0.3 and 0.4, each with a NULL-embedding row (NULL cell,
+    own cluster) and a chain-shaped family inside one cell, which must
+    end up in one cluster."""
+    chain = [950, 910, 940, 920, 930]
+    for seed in (3, 4):
+        rng = np.random.RandomState(seed)
+        base = rng.normal(size=(30, DIM))
+        rows = [(i, (base[i % 30] + rng.normal(size=DIM) * 1.1).tolist()) for i in range(150)]
+        rows += _chain(chain) + [(999, None)]
+        corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>").localCheckpoint()
+        assigned, _ = similarity.ivf_build(corpus, DIM, 8, "embedding", 42, max_iter=8)
+        cell = assigned.select("vec_id", "embedding", "_cell").localCheckpoint()
+        cells = {r.vec_id: r._cell for r in cell.filter(F.col("vec_id") >= 900).collect()}
+        assert len({cells[i] for i in chain}) == 1 and cells[999] is None
+        for thr in (0.3, 0.4):
+            new = _rows(similarity.semantic_dedup(corpus, thr, DIM, n_cells=8, kmeans_max_iter=8))
+            assert new == _rows(_pairs_components_reference(cell, thr))
+            got = {r[0]: r[1] for r in new}
+            assert len({got[i] for i in chain}) == 1 and got[999] == 999
+            assert len(set(got.values())) < len(got) - 10
+
+
+def test_cell_components_chain_family_and_duplicate_id(spark):
+    """Inside one cell, a chain collapses onto its min id however the
+    ids are ordered along it, and a duplicated id is ONE union-find node
+    (as it was under resolve_components): id 5's two rows bridge 3 and 9."""
+    rows = [(i, v, 0) for i, v in _chain([50, 10, 40, 20, 30], dim=4)]
+    rows += [(5, [1.0, 0.0, 0.0, 0.0], 1), (5, [0.0, 1.0, 0.0, 0.0], 1),
+             (3, [1.0, 0.1, 0.0, 0.0], 1), (9, [0.0, 1.0, 0.1, 0.0], 1),
+             (7, [0.0, 0.0, 1.0, 0.0], 1)]
+    cell = spark.createDataFrame(rows, "vec_id long, embedding array<double>, _cell int")
+    got = _rows(_kernel(cell, 0.4))
+    assert got == sorted([(i, 10) for i in (10, 20, 30, 40, 50)]
+                         + [(3, 3), (5, 3), (5, 3), (7, 7), (9, 3)])
+    ref = _pairs_components_reference(cell, 0.4).select("vec_id", "sem_cluster_id")
+    assert got == _rows(ref)
 
 
 def test_cell_threshold_pairs_null_and_zero_norm(spark):
     """NULL embeddings (and the NULL cell they map to) form no pairs —
     identical to the join form, where cosine(NULL, x) is NULL and fails
-    the >= filter; zero-norm embeddings raise loudly naming the id
-    (the join form's 0/0 would silently pass via NaN-greatest — an
-    accident of comparison semantics, not a contract; ADVICE r16)."""
+    the >= filter — so they are their own cluster; zero-norm embeddings
+    raise loudly naming the id (the join form's 0/0 would silently pass
+    via NaN-greatest — an accident of comparison semantics, not a
+    contract); a NULL id raises naming its cell instead of numpy's
+    opaque None-vs-int ordering error."""
     cell = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0), (3, None, None), (4, None, 0)],
         "vec_id long, embedding array<double>, _cell int",
     )
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in similarity._cell_threshold_pairs(cell, 0.5, "vec_id", "embedding").collect()
-    }
-    assert pairs == {(1, 2)}
+    assert _rows(_kernel(cell, 0.5)) == [(1, 1), (2, 1), (3, 3), (4, 4)]
     z = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (7, [0.0, 0.0], 0)],
         "vec_id long, embedding array<double>, _cell int",
     )
     with pytest.raises(Exception, match="zero-norm embedding at vec_id=7"):
-        similarity._cell_threshold_pairs(z, 0.5, "vec_id", "embedding").collect()
+        _kernel(z, 0.5).collect()
+    for ids in ("vec_id long", "vec_id string"):
+        n = spark.createDataFrame(
+            [(None, [1.0, 0.0], 3), ("2" if "string" in ids else 2, [1.0, 0.0], 3)],
+            f"{ids}, embedding array<double>, _cell int",
+        )
+        with pytest.raises(Exception, match="NULL vec_id in cell 3"):
+            _kernel(n, 0.5).collect()
 
 
 def test_threshold_pairs_matrix_zero_norm_raises(spark):
@@ -608,4 +689,37 @@ def test_cell_threshold_pairs_ragged_raises(spark):
         "vec_id long, embedding array<double>, _cell int",
     )
     with pytest.raises(Exception, match="ragged embedding lengths"):
-        similarity._cell_threshold_pairs(cell, 0.5, "vec_id", "embedding").collect()
+        _kernel(cell, 0.5).collect()
+
+
+def _per_cell_literal_cells(vec_col, centroids):
+    """The literal form nearest_cell_expr replaced: one F.lit per
+    centroid element, one score column per centroid."""
+    scores = [
+        float(np.dot(c, c)) - 2.0 * vectors.dot(vec_col, F.array(*[F.lit(float(v)) for v in c]))
+        for c in centroids
+    ]
+    return F.array(*scores)
+
+
+def test_nearest_cell_expr_parity_with_per_cell_literals(spark):
+    """Every score — not just the argmin — is bit-identical to the
+    per-element-literal form, NULL embeddings included (NULL scores,
+    NULL cell)."""
+    rng = np.random.RandomState(9)
+    cents = rng.normal(size=(16, DIM))
+    rows = [(i, rng.normal(size=DIM).tolist()) for i in range(200)] + [(200, None), (201, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ref = _per_cell_literal_cells("embedding", cents)
+    out = df.select(
+        "vec_id",
+        similarity._cell_scores("embedding", cents).alias("new_s"),
+        ref.alias("old_s"),
+        similarity.nearest_cell_expr("embedding", cents).alias("new_c"),
+        (F.array_position(ref, F.array_min(ref)).cast("int") - 1).alias("old_c"),
+    ).collect()
+    assert len(out) == 202
+    for r in out:
+        assert r.new_s == r.old_s and r.new_c == r.old_c
+    assert {r.vec_id for r in out if r.new_c is None} == {200, 201}
+    assert all(s is None for r in out if r.vec_id >= 200 for s in r.new_s)
