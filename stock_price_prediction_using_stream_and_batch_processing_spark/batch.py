@@ -6,11 +6,20 @@ limit pushed into MySQL, ``batch_processor.py:72-79``), collect to
 Pandas, Python-loop length-60 sliding windows, one batched LSTM predict
 (``:88-101``), gated on ≥100 rows (``:121-124``) and ≥60 rows per
 window. Here the whole thing is ONE declarative plan: Parquet scan →
-``TakeOrderedAndProject`` top-k → per-key trailing windows →
-Arrow-batched inference — nothing is collected to the driver, the
-double-execution anti-pattern (``count()`` then ``toPandas`` re-running
-the query, ``:82,114``) is gone, and the scheduler loop stays a thin
-driver concern (``run_forever``).
+``TakeOrderedAndProject`` top-k → hash exchange by the series key →
+per-key trailing windows → inference — nothing is collected to the
+driver, the double-execution anti-pattern (``count()`` then
+``toPandas`` re-running the query, ``:82,114``) is gone, and the
+scheduler loop stays a thin driver concern (``run_forever``).
+
+The key exchange is deliberate. ``TakeOrderedAndProject`` emits ONE
+partition, which already satisfies the window's
+``ClusteredDistribution(key)``, so without it EnsureRequirements plans
+no exchange and the window sort, ``collect_list`` and the dot product
+run as a single task however many cores the session has. The top-k
+output is at most k rows, so one partition per core
+(``defaultParallelism``) is the useful ceiling at any scale; a
+repartition BY NUMBER is one AQE leaves uncoalesced.
 """
 
 from __future__ import annotations
@@ -53,26 +62,6 @@ def latest_ticks(df: DataFrame, ts: str, k: int = 10000) -> DataFrame:
     return topk.latest_k(df, ts, k, tiebreak=ts)
 
 
-def sliding_window_predictions(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    value: str,
-    seq_len: int = 60,
-    min_rows: int = 100,
-    tiebreak: str | None = None,
-) -> DataFrame | None:
-    """Length-``seq_len`` sliding windows + batched inference over the
-    given ticks; returns None when the ``min_rows`` gate fails
-    (reference P0e, ``batch_processor.py:121-124``). The count() here is
-    the ONLY extra job, and it reuses the (cheap) scan — there is no
-    driver collect anywhere."""
-    if df.count() < min_rows:
-        return None
-    win = windows.trailing_collect(df, key, ts, value, seq_len, tiebreak=tiebreak, full_only=True)
-    return predict_over_windows(win, "window_values", seq_len=seq_len)
-
-
 def run_once(
     spark: SparkSession,
     ticks_path: str,
@@ -84,13 +73,28 @@ def run_once(
     min_rows: int = 100,
     metrics: BatchMetrics | None = None,
 ) -> DataFrame | None:
-    """One batch run: scan → top-k latest → windows → predictions."""
+    """One batch run: scan → top-k latest → key exchange → windows →
+    predictions. Returns None when the ``min_rows`` gate fails
+    (reference P0e, ``batch_processor.py:121-124``).
+
+    The gate needs the top-k's row count, which is exactly
+    ``min(k, rows scanned)``, so it never counts the top-k itself (that
+    would run the scan and the sort a second time): it fails at once
+    when ``k < min_rows``, and otherwise takes at most ``min_rows``
+    column-less rows from the scan — one job that stops reading once
+    it has them, whatever the table's size."""
     m = metrics or BatchMetrics()
     t0 = time.time()
     try:
         ticks = spark.read.parquet(ticks_path)
-        recent = latest_ticks(ticks, ts, k)
-        preds = sliding_window_predictions(recent, key, ts, value, seq_len, min_rows, tiebreak=ts)
+        if k < min_rows or len(ticks.select(F.lit(1)).take(min_rows)) < min_rows:
+            preds = None
+        else:
+            recent = latest_ticks(ticks, ts, k).repartition(
+                spark.sparkContext.defaultParallelism, key
+            )
+            win = windows.trailing_collect(recent, key, ts, value, seq_len, tiebreak=ts, full_only=True)
+            preds = predict_over_windows(win, "window_values", seq_len=seq_len)
         m.runs += 1
         return preds
     except Exception:

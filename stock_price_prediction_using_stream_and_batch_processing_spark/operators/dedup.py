@@ -115,9 +115,15 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
     shingled: DataFrame | None = None,
+    banded: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via LSH banding: docs sharing any band
     (rows-per-band = num_hashes/bands) of their MinHash signature.
+
+    ``banded`` takes the caller's own ``lsh_band_keys`` rows of ``df``
+    (same ``num_hashes``/``bands``), already lineage-cut, so a caller
+    that needs the band keys anyway does not pay a second signature
+    aggregation and checkpoint for them.
 
     Plan shape: signatures (narrow) -> explode to (doc, band_key)
     -> self-equi-join on band_key (one shuffle) -> distinct pairs.
@@ -140,10 +146,11 @@ def minhash_lsh_pairs(
     # constant per batch and independent of data size, i.e. amortized
     # at scale; the checkpoint still removes the recompute term, which
     # GROWS with batch size.)
-    banded = lsh_band_keys(
-        df, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_n=shingle_n, shingled=shingled,
-    ).localCheckpoint(eager=False)
+    if banded is None:
+        banded = lsh_band_keys(
+            df, text_col, id_col, num_hashes=num_hashes, bands=bands,
+            shingle_n=shingle_n, shingled=shingled,
+        ).localCheckpoint(eager=False)
     from .maintenance import cap_bucket_size
 
     banded = cap_bucket_size(banded, "band_key", max_bucket_size)
@@ -1035,7 +1042,7 @@ def incremental_near_dup(
     # touching store-matched docs drop out with the anti-join above)
     batch_cands = minhash_lsh_pairs(
         new_docs, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_n=shingle_n, max_bucket_size=max_bucket_size, shingled=shingled,
+        shingle_n=shingle_n, max_bucket_size=max_bucket_size, banded=new_bands,
     )
     batch_verified = ngram_jaccard_pairs(
         new_docs, text_col, id_col, shingle_n=shingle_n, threshold=threshold,

@@ -727,7 +727,8 @@ def threshold_pairs_matrix(
     fixtures; silent null-propagation — or the NaN a 0/0 cosine yields,
     which numpy comparisons silently drop where Spark's NaN-greatest
     ordering would have kept — would silently weaken the certificate;
-    judge ADVICE r16)."""
+    judge ADVICE r16). A NULL id raises naming ``id_col`` on the driver,
+    before the broadcast: the ``id_a < id_b`` mask cannot order it."""
     import pandas as pd  # noqa: F811 — resolves via __globals__ on executors
 
     id_type = corpus.schema[id_col].dataType.simpleString()
@@ -735,6 +736,12 @@ def threshold_pairs_matrix(
     if not rows:
         return corpus.sparkSession.createDataFrame(
             [], f"id_a {id_type}, id_b {id_type}"
+        )
+    null_ids = sum(r[0] is None for r in rows)
+    if null_ids:
+        raise ValueError(
+            f"threshold_pairs_matrix: NULL {id_col} ({null_ids} such row(s)) "
+            "— pairs are ordered by id, so ids must be non-NULL"
         )
     nulls = [r[0] for r in rows if r[1] is None]
     if nulls:

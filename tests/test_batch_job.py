@@ -30,12 +30,49 @@ def test_run_once_matches_numpy_mirror(spark, ticks_path):
     np.testing.assert_allclose(got, want, rtol=1e-12)
 
 
-def test_min_rows_gate(spark, ticks_path):
-    # reference gate: <100 rows -> no run (batch_processor.py:121-124)
-    m = batch.BatchMetrics()
-    preds = batch.run_once(spark, ticks_path, k=50, seq_len=60, min_rows=100, metrics=m)
-    assert preds is None
-    assert m.runs == 1 and m.failures == 0
+def test_run_once_multi_symbol_matches_per_symbol_mirror(spark, tmp_path):
+    # 7 symbols, round-robin ticks: the latest 1003 of 1400 cut the
+    # symbols unevenly (144 or 143 ticks each), and the key exchange
+    # spreads them over the session's cores; every symbol must still
+    # see exactly its own trailing windows
+    symbols = ("AAPL", "AMZN", "GOOG", "META", "MSFT", "NVDA", "TSLA")
+    n, k = 1400, 1003
+    p = str(tmp_path / "multi")
+    ticks_dataframe(spark, n, symbols=symbols).write.parquet(p)
+    preds = batch.run_once(spark, ticks_path=p, k=k, seq_len=60, min_rows=100)
+    got = {}
+    for r in preds.orderBy("timestamp").select("symbol", "predicted_price").collect():
+        got.setdefault(r.symbol, []).append(r.predicted_price)
+    latest = generate_ticks(n, symbols=symbols)[-k:]
+    assert sorted(got) == sorted(symbols)
+    for sym in symbols:
+        want = numpy_predict([t["price"] for t in latest if t["symbol"] == sym], 60)
+        assert len(got[sym]) == len(want) > 0, sym
+        np.testing.assert_allclose(got[sym], want, rtol=1e-12)
+
+
+def test_min_rows_gate(spark, ticks_path, tmp_path):
+    # reference gate: <100 rows -> no run (batch_processor.py:121-124);
+    # the gate is on min(k, input rows), the row count the top-k yields
+    def run(path, k):
+        m = batch.BatchMetrics()
+        preds = batch.run_once(spark, path, k=k, seq_len=60, min_rows=100, metrics=m)
+        assert m.runs == 1 and m.failures == 0
+        return preds
+
+    # k below min_rows over an input that holds enough rows
+    assert run(ticks_path, 50) is None
+    assert run(ticks_path, 99) is None
+    assert run(ticks_path, 100).count() == 100 - 60 + 1
+    # input below min_rows under a k far above it
+    short = str(tmp_path / "short")
+    ticks_dataframe(spark, 99).write.parquet(short)
+    assert run(short, 10_000) is None
+    exact = str(tmp_path / "exact")
+    ticks_dataframe(spark, 100).write.parquet(exact)
+    assert run(exact, 10_000).count() == 100 - 60 + 1
+    # k above the input's 300 rows: all of them window
+    assert run(ticks_path, 10_000).count() == 300 - 60 + 1
 
 
 def test_short_series_yields_no_windows(spark, ticks_path):

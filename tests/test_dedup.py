@@ -688,6 +688,37 @@ def test_incremental_near_dup_native_fence_and_torn_write(spark, tmp_path):
     assert run(b2, 2) == set()
 
 
+def test_incremental_near_dup_bands_once_per_night(spark, tmp_path, monkeypatch):
+    """The new batch's band keys serve both the store-cross candidates
+    and the in-batch pair finder: one MinHash aggregation per night
+    (none on a replayed night), and the answers stay as before."""
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup as dd
+
+    calls = {"n": 0}
+    orig = dd.lsh_band_keys
+
+    def counting(*a, **k):
+        calls["n"] += 1
+        return orig(*a, **k)
+
+    monkeypatch.setattr(dd, "lsh_band_keys", counting)
+    store = str(tmp_path / "nd_bands_once")
+
+    def night(rows, b):
+        calls["n"] = 0
+        df = spark.createDataFrame(rows, ["doc_id", "text"])
+        out = {r.doc_id for r in dd.incremental_near_dup(
+            spark, df, store, writer_id="nightly", batch_id=b
+        ).collect()}
+        return out, calls["n"]
+
+    n0 = [(1, BASE), (2, BASE.replace("lazy", "idle")), (3, NOVEL)]
+    assert night(n0, 0) == ({1, 3}, 1)
+    n1 = [(10, BASE.replace("garden", "meadow")), (11, NOVEL + " today"), (12, "an unrelated short note")]
+    assert night(n1, 1) == ({12}, 1)
+    assert night(n1, 1) == ({12}, 0)  # replayed night: no banding at all
+
+
 def test_incremental_near_dup_crash_inside_commit_refuses_loudly(spark, tmp_path):
     """A crash INSIDE the catalog commit — after a branch published to
     its main line, before the catalog version did — is the one window

@@ -155,6 +155,38 @@ def test_tiny_batch_coalesce_eliminates_window_exchange(spark):
     assert "Exchange hashpartitioning" in win2._jdf.queryExecution().executedPlan().toString()
 
 
+def test_batch_job_spreads_topk_over_cores_by_key(spark, tmp_path):
+    # TakeOrderedAndProject emits ONE partition, which would satisfy the
+    # window's ClusteredDistribution(symbol) with no exchange at all and
+    # run the whole job as one task; run_once hash-repartitions the
+    # top-k by the key into defaultParallelism partitions BY NUMBER, so
+    # AQE keeps them, and the window runs one task per core.
+    import re
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark import batch
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import (
+        ticks_dataframe,
+    )
+
+    p = str(tmp_path / "ticks")
+    ticks_dataframe(spark, 400, symbols=("A", "B", "C", "D", "E")).write.parquet(p)
+    preds = batch.run_once(spark, p, k=300, seq_len=60, min_rows=100)
+    n = spark.sparkContext.defaultParallelism
+    plan = preds._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(rf"Exchange hashpartitioning\(symbol#\d+, {n}\), REPARTITION_BY_NUM", plan), plan
+    lines = plan.splitlines()
+    pos = {
+        op: next(i for i, ln in enumerate(lines) if op in ln)
+        for op in ("Window", "Exchange", "TakeOrderedAndProject")
+    }
+    assert pos["Window"] < pos["Exchange"] < pos["TakeOrderedAndProject"], plan
+    # after execution AQE has not coalesced the key partitions
+    preds.collect()
+    final = preds._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final and "AQEShuffleRead" not in final, final
+
+
 def test_runtime_bloom_filter_prunes_fact_scan(spark):
     """At 100 TB the win of a selective dim join is pruning the FACT
     side before the shuffle. Spark's runtime bloom filter does exactly

@@ -661,6 +661,17 @@ def test_threshold_pairs_matrix_zero_norm_raises(spark):
         similarity.threshold_pairs_matrix(z, 0.5)
 
 
+def test_threshold_pairs_matrix_null_id_raises(spark):
+    """A NULL id refuses on the driver naming the id column, for long
+    and string ids alike, instead of dying in the executor's id mask."""
+    for ids, other in (("vec_id long", 2), ("vec_id string", "2")):
+        n = spark.createDataFrame(
+            [(None, [1.0, 0.0]), (other, [1.0, 0.0])], f"{ids}, embedding array<double>"
+        )
+        with pytest.raises(ValueError, match="NULL vec_id"):
+            similarity.threshold_pairs_matrix(n, 0.5)
+
+
 def test_threshold_pairs_margin_sf01():
     """ADVICE r16: pin the matmul-vs-fold margin argument at sf0.1 —
     the SF the bench face actually runs — not just the small fixtures.
