@@ -326,7 +326,6 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max
 
 def resolve_components(
     pairs: DataFrame,
-    method: str = "auto",
     id_a: str = "id_a",
     id_b: str = "id_b",
 ) -> DataFrame:
@@ -336,27 +335,16 @@ def resolve_components(
     templated boilerplate produces in real corpora — must never abort
     a dedup or a split).
 
-    - ``"auto"`` (default): min-label propagation first — O(diameter)
-      rounds, 2-3 in practice for the clique-shaped families near-dup
-      graphs mostly are, and ~3 s cheaper per call than the doubling
-      machinery locally. If its diameter bound trips (the LOUD
-      RuntimeError), fall back to pointer-doubling contraction, which
-      finishes any shape in O(log diameter) rounds. Both paths are
-      result-identical (cluster_id = min reachable id), so the
-      fallback changes cost, never answers. Propagation runs its
-      rounds eagerly (per-round convergence checks), so the failed
-      attempt costs its max_iters rounds — the price of keeping the
-      common case cheap.
-    - ``"doubling"`` / ``"propagation"``: force one path.
+    Min-label propagation runs first — O(diameter) rounds, 2-3 in
+    practice for the clique-shaped families near-dup graphs mostly
+    are, and fewer Spark jobs there than the doubling machinery. If
+    its diameter bound trips (the LOUD RuntimeError), pointer-doubling
+    contraction takes over and finishes any shape in O(log diameter)
+    rounds; the failed attempt costs its max_iters rounds, the price
+    of keeping the common case cheap. Both paths are result-identical
+    (cluster_id = min reachable id), so the fallback changes cost,
+    never answers.
     """
-    if method == "doubling":
-        return dedup_clusters_doubling(pairs, id_a, id_b)
-    if method == "propagation":
-        return dedup_clusters(pairs, id_a, id_b)
-    if method != "auto":
-        raise ValueError(
-            f"components method must be auto|propagation|doubling, got {method!r}"
-        )
     try:
         return dedup_clusters(pairs, id_a, id_b)
     except RuntimeError as exc:
@@ -536,7 +524,6 @@ def near_dup_filter(
     bands: int = 4,
     max_bucket_size: int | None = None,
     dedup_exact_first: bool = True,
-    components: str = "auto",
 ) -> DataFrame:
     """The canonical end-to-end LLM-corpus near-dup REMOVAL pipeline as
     one operator: exact-copy collapse → MinHash-LSH candidate pairs →
@@ -578,7 +565,6 @@ def near_dup_filter(
         return near_dup_filter(
             reps, text_col, id_col, shingle_n, threshold, num_hashes,
             bands, max_bucket_size, dedup_exact_first=False,
-            components=components,
         )
     # the shingle projection is the pipeline's dominant cost and feeds
     # BOTH the signature and verification stages with different
@@ -592,7 +578,7 @@ def near_dup_filter(
         df, text_col, id_col, shingle_n=shingle_n, threshold=threshold,
         candidates=cands, shingled=shingled,
     )
-    clusters = resolve_components(verified, components)
+    clusters = resolve_components(verified)
     drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return df.join(drop, df[id_col] == drop["doc_id"], "left_anti")
 
@@ -1218,7 +1204,6 @@ def leakage_safe_split(
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = None,
-    components: str = "auto",
 ) -> DataFrame:
     """Train/eval split that can NEVER leak a near-duplicate across the
     boundary: hash-split by the near-dup CLUSTER representative instead
@@ -1251,7 +1236,7 @@ def leakage_safe_split(
         df, text_col, id_col, shingle_n=shingle_n, threshold=threshold,
         candidates=cands, shingled=shingled,
     )
-    clusters = resolve_components(verified, components).withColumnRenamed("doc_id", "_cl_doc")
+    clusters = resolve_components(verified).withColumnRenamed("doc_id", "_cl_doc")
     out = df.join(clusters, df[id_col] == F.col("_cl_doc"), "left").drop("_cl_doc")
     rep = F.coalesce(F.col("cluster_id"), F.col(id_col))
     return out.withColumn("cluster_id", rep).withColumn(

@@ -320,6 +320,45 @@ def _union_min(parent: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
             parent = jumped
 
 
+def _unit_rows(ids, vals: list, id_col: str, where: str = "") -> tuple[np.ndarray, np.ndarray]:
+    """The input refusals of the embedding pair kernels, in one place.
+    ``ids`` (array-like) and ``vals`` (embedding lists, None for a NULL
+    embedding) hold one entry per row. A NULL id, ragged lengths or a
+    zero-norm embedding raise a ValueError naming the input; ``where``
+    says where the rows come from (e.g. " in cell 3"). A zero-norm
+    row has no defined cosine: refusing it beats the NaN a 0/0 yields,
+    which numpy comparisons drop silently where Spark's NaN-greatest
+    ordering would keep it. NULL embeddings are the caller's policy and
+    are skipped here. Returns the positions of the non-NULL embeddings
+    and their unit rows."""
+    n_null = int(pd.isna(ids).sum())
+    if n_null:
+        raise ValueError(
+            f"NULL {id_col}{where} ({n_null} such row(s)) — ids must be "
+            "unique and non-NULL"
+        )
+    keep = np.asarray([i for i, v in enumerate(vals) if v is not None], dtype=np.intp)
+    if not len(keep):
+        return keep, np.zeros((0, 0))
+    kept_ids = np.asarray(ids)[keep]
+    dims = {len(vals[i]) for i in keep}
+    if len(dims) > 1:
+        raise ValueError(
+            f"ragged embedding lengths {sorted(dims)}{where} (e.g. "
+            f"{id_col}={kept_ids[0]}) — fix the embedding column first"
+        )
+    m = np.asarray([vals[i] for i in keep], dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1)
+    zero = np.nonzero(norms == 0.0)[0]
+    if len(zero):
+        raise ValueError(
+            f"zero-norm embedding at {id_col}={kept_ids[zero[0]]} ({len(zero)} "
+            f"such row(s){where}) — cosine is undefined; filter or re-embed "
+            "degenerate vectors first"
+        )
+    return keep, m / norms[:, None]
+
+
 def _cell_components(
     cell: DataFrame,
     threshold: float,
@@ -333,7 +372,9 @@ def _cell_components(
     input shuffles once by cell; each cell's pairs come from a single
     ``U @ Uᵀ`` BLAS matmul over unit rows (upper triangle), and a
     union-find over those pairs labels every row of the cell. No pair
-    frame, no component rounds, no join back to the corpus.
+    frame, no component rounds, no join back to the corpus. This is the
+    engine's one way from embedding similarity to components: callers
+    that need exact all-pairs components pass one constant cell.
 
     Per-cell memory is O(cell_size × dim + cell_size²) — exactly the
     quadratic term SemDeDup's cell policy already bounds
@@ -346,20 +387,14 @@ def _cell_components(
 
     Union-find nodes are id VALUES: a duplicated id inside a cell is one
     node. Ids must be unique across the corpus — a duplicate split
-    over two cells is two nodes — and non-NULL: a NULL id raises,
-    naming its cell.
+    over two cells is two nodes.
 
     Edge semantics: a NULL ``cell_col`` group (NULL embeddings
     null-propagate through cell assignment) and NULL embeddings inside
     a group form no pairs — identical to a join form, where
     cosine(NULL, ·) is NULL and fails the >= filter — so those rows are
-    their own cluster. Ragged embedding lengths within a cell raise; a
-    ZERO-NORM embedding raises, naming the id: a join form's 0/0 cosine
-    is NaN, which Spark's NaN-greatest comparison semantics would have
-    PASSED through the >= filter — an accident of ordering semantics,
-    not a contract; the matmul path refuses the degenerate input loudly
-    (same posture as ``threshold_pairs_matrix``)."""
-    import pandas as pd  # noqa: F811 — resolves via __globals__ on executors
+    their own cluster. A NULL id, ragged lengths or a zero-norm
+    embedding raise naming the cell (``_unit_rows``)."""
     from pyspark.sql.types import StructField, StructType
 
     id_field = cell.schema[id_col]
@@ -368,39 +403,15 @@ def _cell_components(
 
     def components_of_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col]
-        if ids.isna().any():
-            c = pdf[cell_col].iloc[0]
-            raise ValueError(
-                f"semantic_dedup: NULL {id_col} in cell "
-                f"{'NULL' if pd.isna(c) else c} ({int(ids.isna().sum())} such "
-                "row(s)) — ids must be unique and non-NULL across the corpus"
-            )
+        key = pdf[cell_col].iloc[0]
+        keep, u = _unit_rows(
+            ids, pdf[vec_col].tolist(), id_col, f" in cell {'NULL' if pd.isna(key) else key}"
+        )
         # one node per distinct id, numbered in id order: a component's
         # root (its smallest node) is its min id
         node, uniq = pd.factorize(ids, sort=True)
         root = np.arange(len(uniq))
-        vals = pdf[vec_col].tolist()
-        keep = [i for i, v in enumerate(vals) if v is not None]
         if len(keep) >= 2:
-            kept_ids = ids.to_numpy()[keep]
-            dims = {len(vals[i]) for i in keep}
-            if len(dims) > 1:
-                raise ValueError(
-                    f"semantic_dedup: ragged embedding lengths {sorted(dims)} "
-                    f"within one cell (e.g. {id_col}={kept_ids[0]}) — fix the "
-                    "embedding column before deduplicating"
-                )
-            m = np.asarray([vals[i] for i in keep], dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            zero = np.nonzero(norms == 0.0)[0]
-            if len(zero):
-                raise ValueError(
-                    f"semantic_dedup: zero-norm embedding at "
-                    f"{id_col}={kept_ids[zero[0]]} ({len(zero)} such row(s) in its "
-                    "cell) — cosine is undefined; filter or re-embed "
-                    "degenerate vectors first"
-                )
-            u = m / norms[:, None]
             r, c = np.nonzero(np.triu(u @ u.T >= thr, 1))
             kept_node = node[keep]
             root = _union_min(root, kept_node[r], kept_node[c])
@@ -549,13 +560,15 @@ def incremental_semantic_dedup(
       corpus.
 
     Per batch: (1) assign new vectors to cells via the stored centroids
-    (literal-folded argmin — no broadcast join, no Python); (2)
-    candidates = new x store within a cell (partition-pruned equi-join)
-    plus new x new within a cell; (3) exact cosine >= threshold on
-    candidates (rows pre-normalized once, single dot fold per pair);
-    (4) store-matched new vectors drop, surviving in-batch matches
-    collapse through resolve_components (min-id keeper); (5) admitted
-    rows append to the store's cell partitions in ONE atomic commit.
+    (literal-folded argmin — no broadcast join, no Python); (2) new x
+    store candidates within a cell (partition-pruned equi-join), exact
+    cosine >= threshold on them (rows pre-normalized once, single dot
+    fold per pair); (3) store-matched new vectors drop (an anti join);
+    (4) the survivors' in-batch matches collapse inside the per-cell
+    matmul kernel (``_cell_components``: exact, since every pair lies in
+    one cell; min-id keeper) — a NULL id raises there, naming its cell;
+    (5) admitted rows append to the store's cell partitions in ONE
+    atomic commit.
 
     EXACTLY-ONCE: pass ``writer_id`` + ``batch_id`` (the night number)
     and the store append rides the snapshot store's per-writer epoch
@@ -575,7 +588,7 @@ def incremental_semantic_dedup(
     exact replay by the registered face)."""
     import os
 
-    from . import dedup, snapshots as snap
+    from . import snapshots as snap
 
     if (writer_id is None) != (batch_id is None):
         raise ValueError("writer_id and batch_id must be passed together")
@@ -633,10 +646,7 @@ def incremental_semantic_dedup(
         .withColumn("_u", vectors.unit(vec_col))
         .localCheckpoint(eager=False)
     )
-    nb = assigned.select(
-        F.col(id_col).alias("_nid"), F.col("_u").alias("_nu"), "_cell"
-    )
-    matched = None
+    survivors = assigned
     if store_exists:
         # metadata-sized collect: the distinct cells this batch occupies
         # (<= n_cells ints) drive the partition prune — the join reads
@@ -649,37 +659,28 @@ def incremental_semantic_dedup(
             F.col("cell").alias("_cell"),
         )
         matched = (
-            nb.join(store, "_cell")
+            assigned.select(F.col(id_col).alias("_nid"), F.col("_u").alias("_nu"), "_cell")
+            .join(store, "_cell")
             .filter(vectors.dot("_nu", "_su") >= threshold)
             .select(F.col("_nid").alias(id_col))
             .distinct()
         )
-    survivors = (
-        new_vecs.join(matched, id_col, "left_anti") if matched is not None else new_vecs
+        # an anti join, not an inner join on the id: a NULL id survives
+        # it and reaches the kernel, which refuses it by name
+        survivors = assigned.join(matched, id_col, "left_anti")
+    # in-batch collapse inside the per-cell kernel: every pair lies in
+    # one cell, so its components are exact; min id keeps. The semi
+    # join reads the checkpointed batch, so the store match runs once.
+    keepers = (
+        _cell_components(survivors, threshold, id_col, vec_col)
+        .filter(F.col(id_col) == F.col("sem_cluster_id"))
+        .select(id_col)
     )
-    surv_ids = survivors.select(id_col)
-    a = nb.join(
-        surv_ids.withColumnRenamed(id_col, "_nid"), "_nid"
-    ).select(F.col("_nid").alias("id_a"), F.col("_nu").alias("_ua"), "_cell")
-    b = a.select(
-        F.col("id_a").alias("id_b"), F.col("_ua").alias("_ub"), "_cell"
-    )
-    batch_pairs = (
-        a.join(b, "_cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(vectors.dot("_ua", "_ub") >= threshold)
-        .select("id_a", "id_b")
-    )
-    clusters = dedup.resolve_components(batch_pairs)
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    admitted = survivors.join(drop, id_col, "left_anti").localCheckpoint(eager=True)
-    adm_ids = admitted.select(id_col)
+    admitted = assigned.join(keepers, id_col, "left_semi").localCheckpoint(eager=True)
     snap.snapshot_append(
         spark,
         vec_store,
-        assigned.join(adm_ids, id_col).select(
+        admitted.select(
             id_col, vec_col, "_u", F.col("_cell").alias("cell"),
             F.lit(-1 if batch_id is None else batch_id).cast("long").alias("night"),
         ),
@@ -722,49 +723,25 @@ def threshold_pairs_matrix(
     above the band, so the emitted PAIR SET is provably identical to
     the higher-order-function form (parity-pinned).
 
-    NULL, wrong-length, or ZERO-NORM embeddings raise a descriptive
-    error naming the offending id (the certification faces feed curated
-    fixtures; silent null-propagation — or the NaN a 0/0 cosine yields,
-    which numpy comparisons silently drop where Spark's NaN-greatest
-    ordering would have kept — would silently weaken the certificate;
-    judge ADVICE r16). A NULL id raises naming ``id_col`` on the driver,
-    before the broadcast: the ``id_a < id_b`` mask cannot order it."""
-    import pandas as pd  # noqa: F811 — resolves via __globals__ on executors
-
+    A NULL id, wrong-length or ZERO-NORM embeddings raise on the driver,
+    before the broadcast, naming the offending input (``_unit_rows``,
+    shared with the per-cell kernel). A NULL embedding raises too: the
+    certification faces feed curated fixtures, and silently dropping
+    its pairs would weaken the certificate."""
     id_type = corpus.schema[id_col].dataType.simpleString()
     rows = corpus.select(id_col, vec_col).collect()
     if not rows:
         return corpus.sparkSession.createDataFrame(
             [], f"id_a {id_type}, id_b {id_type}"
         )
-    null_ids = sum(r[0] is None for r in rows)
-    if null_ids:
-        raise ValueError(
-            f"threshold_pairs_matrix: NULL {id_col} ({null_ids} such row(s)) "
-            "— pairs are ordered by id, so ids must be non-NULL"
-        )
-    nulls = [r[0] for r in rows if r[1] is None]
-    if nulls:
+    ids = np.asarray([r[0] for r in rows])
+    keep, mu = _unit_rows(ids, [r[1] for r in rows], id_col)
+    if len(keep) < len(rows):
+        nulls = [r[0] for r in rows if r[1] is None]
         raise ValueError(
             f"threshold_pairs_matrix: NULL embedding at {id_col}={nulls[0]} "
             f"({len(nulls)} such row(s))"
         )
-    dims = {len(r[1]) for r in rows}
-    if len(dims) > 1:
-        raise ValueError(
-            f"threshold_pairs_matrix: ragged embedding lengths {sorted(dims)}"
-        )
-    ids = np.asarray([r[0] for r in rows])
-    m = np.asarray([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(m, axis=1)
-    zero = np.nonzero(norms == 0.0)[0]
-    if len(zero):
-        raise ValueError(
-            f"threshold_pairs_matrix: zero-norm embedding at "
-            f"{id_col}={ids[zero[0]]} ({len(zero)} such row(s)) — cosine is "
-            "undefined; filter or re-embed degenerate vectors first"
-        )
-    mu = m / norms[:, None]
     thr = float(threshold)
     # ship the collected side through a broadcast handle so the
     # O(N·dim) matrix crosses to each executor ONCE instead of riding

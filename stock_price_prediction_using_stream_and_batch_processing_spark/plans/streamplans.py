@@ -1067,15 +1067,10 @@ def stream_stateful_trailing_predict(spark, sf_dir):
     row: the reference's trailing-5 resets at every micro-batch,
     ``stream_consumer.py:72-76``; the stateful operator carries the
     last 4 prices per key so windows SPAN batch boundaries —
-    streaming/stateful.py). GA-API-FIRST (r12): the face runs Spark 4's
-    ``transformWithState`` (typed state handles, RocksDB provider)
-    and falls back to the pinned-equal ``applyInPandasWithState`` twin
-    only on the one documented init failure (protobuf-backed state
-    server absent in this container — §2.11); any other error
-    propagates. The stream is a 4-file arrival-ordered
-    split run with ``maxFilesPerTrigger=1`` (asserted: >= 4 non-empty
-    micro-batches), so every user's series is cut mid-stream 3 times;
-    the oracle is the ONE-SHOT window+predict over the full series —
+    streaming/stateful.py, ``applyInPandasWithState``). The stream is
+    a 4-file arrival-ordered split run with ``maxFilesPerTrigger=1``
+    (asserted: >= 4 non-empty micro-batches), so every user's series is
+    cut mid-stream 3 times; the oracle is the ONE-SHOT window+predict over the full series —
     equality holds iff state genuinely crosses the cuts (a reset would
     DROP the first 4 rows of each user's continuation batches: a loud
     row-count mismatch, the exact bug the reference has). Prediction is
@@ -1087,93 +1082,53 @@ def stream_stateful_trailing_predict(spark, sf_dir):
     from ..ml.inference import predict_over_windows
     from ..session import track_memory_sink_table
     from ..sources.tables import ensure_session_confs
-    from ..streaming.stateful import (
-        continuous_trailing_windows,
-        continuous_trailing_windows_tws,
-    )
+    from ..streaming.stateful import continuous_trailing_windows
 
     ensure_session_confs(spark)
     split_dir = _time_split_events_dir(spark, sf_dir, n_files=4)
     schema = spark.read.parquet(split_dir).schema
 
-    def run_once(windows_fn, provider: str | None):
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(split_dir)
-        )
-        parsed = src.select(
-            F.col("user_id").cast("string").alias("symbol"),
-            F.col("ts").alias("timestamp"),
-            F.col("value").alias("price"),
-            F.col("event_id").alias("volume"),
-        )
-        pred = predict_over_windows(
-            windows_fn(parsed, seq_len=5), "window_values", seq_len=5
-        )
-        out = pred.select(
-            F.col("symbol").cast("long").alias("user_id"),
-            F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-            "price",
-            F.round("predicted_price", 4).alias("predicted_price"),
-        )
-        name = f"stream_sstp_{uuid.uuid4().hex[:8]}"
-        track_memory_sink_table(name)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider",
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-        if n_batches < 4:
-            raise AssertionError(
-                f"stateful stream must span >= 4 micro-batches, saw {n_batches}"
-            )
-        return spark.table(name)
-
-    # GA-API-first (VERDICT r11 #7): run transformWithState (typed
-    # state handles, RocksDB provider — the 100 TB state path)
-    # whenever its ONE documented dependency is present, falling back
-    # to the pinned-equal applyInPandasWithState twin only when it is
-    # not (the state-server wire protocol needs protobuf, absent in
-    # this container — SURVEY §2.11; the exact init failure is pinned
-    # in tests/test_streaming.py). The probe is an import, not a
-    # doomed 2 s query start; with protobuf present NO fallback exists
-    # — a real transformWithState failure must propagate, never be
-    # papered over (tests/test_streaming.py pins that too).
+    src = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(split_dir)
+    )
+    parsed = src.select(
+        F.col("user_id").cast("string").alias("symbol"),
+        F.col("ts").alias("timestamp"),
+        F.col("value").alias("price"),
+        F.col("event_id").alias("volume"),
+    )
+    pred = predict_over_windows(
+        continuous_trailing_windows(parsed, seq_len=5), "window_values", seq_len=5
+    )
+    out = pred.select(
+        F.col("symbol").cast("long").alias("user_id"),
+        F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
+        "price",
+        F.round("predicted_price", 4).alias("predicted_price"),
+    )
+    name = f"stream_sstp_{uuid.uuid4().hex[:8]}"
+    track_memory_sink_table(name)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    if has_protobuf:
-        return run_once(
-            continuous_trailing_windows_tws,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-    return run_once(continuous_trailing_windows, None)
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    if n_batches < 4:
+        raise AssertionError(
+            f"stateful stream must span >= 4 micro-batches, saw {n_batches}"
+        )
+    return spark.table(name)
 
 
 @register(

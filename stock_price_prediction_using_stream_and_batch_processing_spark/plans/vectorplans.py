@@ -179,7 +179,7 @@ def cell_assign_matrix_embeddings(spark, sf_dir):
 )
 def semantic_dedup_embeddings(spark, sf_dir):
     """SemDeDup-style semantic deduplication (k-means cells -> intra-
-    cell cosine >= 0.4 -> pointer-doubling components -> min-id keeper;
+    cell cosine >= 0.4 -> per-cell matmul components -> min-id keeper;
     operators/similarity.semantic_dedup) with the invariant-oracle
     pattern established by ``cosine_topk_ivf``: the registered output
     is the EXACT brute-force semantic dedup over the sampled corpus —
@@ -201,11 +201,9 @@ def semantic_dedup_embeddings(spark, sf_dir):
 
     At 100 TB the clustered path is the point: the quadratic term is
     per-cell (corpus bucketed by cell, n_cells grown ~sqrt(N) per the
-    SemDeDup recipe), components are O(log diameter) pointer-doubling
-    rounds, and this verification face — which reads all pairs to have
+    SemDeDup recipe), components resolve inside the per-cell kernel,
+    and this verification face — which reads all pairs to have
     something exact to certify against — runs on a fixed sample."""
-    from ..operators import dedup
-
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
     # r16: exact pair enumeration via the blocked-BLAS primitive — the
     # same pair SET as the broadcast-NL + higher-order-dot filter it
@@ -215,22 +213,15 @@ def semantic_dedup_embeddings(spark, sf_dir):
     true_pairs = (
         similarity.threshold_pairs_matrix(e, 0.4, id_col="vec_id", vec_col="embedding")
         .select(F.col("id_a"), F.col("id_b"))
-        # consumed 3x (exact components, superset check, recall join):
-        # cut the half-million-pair brute-force lineage once
-        .localCheckpoint(eager=False)
     )
-    # exact side: the near-dup families here are small cliques, so
-    # O(diameter) propagation suffices (and is ~3 s cheaper than the
-    # doubling machinery per call); the operator under test keeps
-    # pointer doubling for the chain-shaped families real corpora grow
-    comps = dedup.dedup_clusters(true_pairs)
+    # exact side: the clustered path's kernel over the whole sample as
+    # ONE cell — every pair is compared, so its components are the
+    # exact ones (one matmul, no component rounds, no join back)
     exact = (
-        e.select("vec_id")
-        .join(comps, F.col("vec_id") == F.col("doc_id"), "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("cluster_id"), F.col("vec_id")).alias("cluster_id"),
+        similarity._cell_components(
+            e.withColumn("_cell", F.lit(0)), 0.4, "vec_id", "embedding"
         )
+        .withColumnRenamed("sem_cluster_id", "cluster_id")
         .withColumn("keep", F.col("vec_id") == F.col("cluster_id"))
     )
     sem = (
@@ -246,8 +237,8 @@ def semantic_dedup_embeddings(spark, sf_dir):
             F.col("keep").alias("_sem_keep"),
         )
         # consumed twice (recall scalar, final row join) and expensive
-        # to rebuild (k-means fit + doubling): materialize the
-        # corpus-row-count frame once
+        # to rebuild (k-means fit): materialize the corpus-row-count
+        # frame once
         .localCheckpoint(eager=True)
     )
     # component-level pair recall: a true pair is recovered iff the
@@ -721,8 +712,6 @@ def incremental_semantic_dedup_embeddings(spark, sf_dir):
         op_admitted = op_admitted.localCheckpoint(eager=True)
 
         # ---- exact replay (the value-checked output) ----
-        from ..operators import dedup
-
         u = sub.select("vec_id", "night", vectors.unit("embedding").alias("_u"))
         a = u.select(F.col("vec_id").alias("id_a"), F.col("_u").alias("_ua"))
         b = u.select(F.col("vec_id").alias("id_b"), F.col("_u").alias("_ub"))
@@ -735,9 +724,9 @@ def incremental_semantic_dedup_embeddings(spark, sf_dir):
         exact_adm = None
         parts = []
         for n in range(3):
-            ids_n = sub.filter(F.col("night") == n).select("vec_id")
+            batch_n = sub.filter(F.col("night") == n).select("vec_id", "embedding")
             if exact_adm is None:
-                surv = ids_n
+                surv = batch_n
             else:
                 m1 = pairs.join(
                     exact_adm.withColumnRenamed("vec_id", "id_b"), "id_b"
@@ -745,24 +734,24 @@ def incremental_semantic_dedup_embeddings(spark, sf_dir):
                 m2 = pairs.join(
                     exact_adm.withColumnRenamed("vec_id", "id_a"), "id_a"
                 ).select(F.col("id_b").alias("vec_id"))
-                surv = ids_n.join(m1.union(m2).distinct(), "vec_id", "left_anti")
-            bp = (
-                pairs.join(surv.withColumnRenamed("vec_id", "id_a"), "id_a")
-                .join(surv.withColumnRenamed("vec_id", "id_b"), "id_b")
-                .select("id_a", "id_b")
+                surv = batch_n.join(m1.union(m2).distinct(), "vec_id", "left_anti")
+            # in-batch components over ALL the night's survivor pairs:
+            # the kernel with the survivors as one cell
+            adm_n = (
+                sim._cell_components(
+                    surv.withColumn("_cell", F.lit(0)), 0.35, "vec_id", "embedding"
+                )
+                .filter(F.col("vec_id") == F.col("sem_cluster_id"))
+                .select("vec_id")
+                .localCheckpoint(eager=True)
             )
-            comps = dedup.resolve_components(bp)
-            drop = comps.filter(F.col("doc_id") != F.col("cluster_id")).select(
-                F.col("doc_id").alias("vec_id")
-            )
-            adm_n = surv.join(drop, "vec_id", "left_anti").localCheckpoint(eager=True)
             exact_adm = (
                 adm_n
                 if exact_adm is None
                 else exact_adm.union(adm_n).localCheckpoint(eager=True)
             )
             parts.append(
-                ids_n.join(
+                batch_n.select("vec_id").join(
                     adm_n.withColumn("_a", F.lit(True)), "vec_id", "left"
                 ).select(
                     "vec_id",

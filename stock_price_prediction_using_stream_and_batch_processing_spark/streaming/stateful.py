@@ -49,12 +49,9 @@ def _gather_sorted(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
 def _fold_windows(
     key, tail: np.ndarray, pdf: pd.DataFrame, seq_len: int
 ) -> tuple[pd.DataFrame | None, list[float]]:
-    """The ONE trailing-window fold both stateful APIs share: given the
-    carried tail (last seq_len-1 prices) and a sorted batch frame,
-    return (full-window output rows or None, new tail). Extracted so a
-    change to the window math cannot silently diverge the
-    applyInPandasWithState and transformWithState paths (tests assert
-    them equivalent)."""
+    """The trailing-window fold: given the carried tail (last seq_len-1
+    prices) and a sorted batch frame, return (full-window output rows
+    or None, new tail)."""
     prices = pdf["price"].to_numpy(dtype=float)
     allp = np.concatenate([tail, prices])
     n_carry = len(tail)
@@ -136,62 +133,4 @@ def continuous_ewma(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
 
     return parsed.groupBy("symbol").applyInPandasWithState(
         fn, EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor  # noqa: E402
-
-
-class _TrailingWindowProcessor(StatefulProcessor):
-    """transformWithState processor: carries the last seq_len-1 prices
-    per key in a ValueState, same fold as continuous_trailing_windows.
-    Module-level class: the processor is pickled to the state server
-    worker, so it must be importable by qualified name."""
-
-    def __init__(self, seq_len: int):
-        self.seq_len = seq_len
-
-    def init(self, handle) -> None:
-        self.tail = handle.getValueState("tail", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-        (tail,) = self.tail.get() if self.tail.exists() else ([],)
-        tail = np.asarray(tail, dtype=float)
-        pdf = _gather_sorted(rows)
-        if len(pdf) == 0:
-            self.tail.update((list(tail),))
-            return
-        out, new_tail = _fold_windows(key, tail, pdf, self.seq_len)
-        self.tail.update((new_tail,))
-        if out is not None and len(out):
-            yield out
-
-    def handleInitialState(self, key, initialState, timer_values) -> None:  # pragma: no cover
-        pass
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):  # pragma: no cover
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def continuous_trailing_windows_tws(parsed: DataFrame, seq_len: int = 5) -> DataFrame:
-    """``continuous_trailing_windows`` on Spark 4's ``transformWithState``
-    API (the GA successor to ``applyInPandasWithState``: typed state
-    handles, TTL, timers, initial state). Functionally identical here —
-    asserted equal in tests when runnable — but the state layer is the
-    supported forward path and REQUIRES (a) the RocksDB state-store
-    provider (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider``), also what a 100 TB deployment
-    runs for state larger than executor heap, and (b) the ``protobuf``
-    package (the state-server wire protocol) — absent from this
-    container, so tests pin the exact initialization failure the same
-    way the Kafka seam is pinned, and the equivalence assertion
-    activates wherever protobuf is installed."""
-    return parsed.groupBy("symbol").transformWithStateInPandas(
-        statefulProcessor=_TrailingWindowProcessor(seq_len),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
     )

@@ -558,21 +558,12 @@ def test_resolve_components_auto_falls_back_on_long_chain(spark):
     assert got == {i: 0 for i in range(129)}
 
 
-def test_resolve_components_methods_agree_and_validate(spark):
-    import pytest as _pytest
-
+def test_resolve_components_equals_propagation_on_short_graph(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21)], "id_a long, id_b long"
     )
     want = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
-    for m in ("auto", "propagation", "doubling"):
-        got = {
-            r.doc_id: r.cluster_id
-            for r in dedup.resolve_components(pairs, m).collect()
-        }
-        assert got == want, m
-    with _pytest.raises(ValueError, match="components method"):
-        dedup.resolve_components(pairs, "bogus")
+    assert {r.doc_id: r.cluster_id for r in dedup.resolve_components(pairs).collect()} == want
 
 
 def _chain_corpus(spark, n_docs=26, width=12):
@@ -596,11 +587,6 @@ def test_leakage_safe_split_survives_chain_family(spark):
     assert len(out) == 26
     assert {r.cluster_id for r in out} == {0}
     assert len({r.split for r in out}) == 1
-    # the forced-doubling flag gives the identical answer
-    forced = dedup.leakage_safe_split(
-        df, "text", "doc_id", eval_pct=30, components="doubling"
-    ).collect()
-    assert sorted(map(tuple, forced)) == sorted(map(tuple, out))
 
 
 def test_near_dup_filter_survives_chain_family(spark):

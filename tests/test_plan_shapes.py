@@ -382,3 +382,36 @@ def test_parse_ticks_parses_json_once(spark):
     assert parsed.count() == 1
     bad = spark.createDataFrame([(bytearray(b'{"symbol":'),)], "value binary")
     assert parse_ticks(bad).count() == 0
+
+
+def test_incremental_semantic_night_is_one_grouped_kernel(spark, tmp_path, monkeypatch):
+    # A night's admitted frame resolves in-batch duplicates inside the
+    # per-cell kernel: exactly one FlatMapGroupsInPandas and no _cell
+    # self-join — on the bootstrap night no _cell join at all, once a
+    # store exists only the store match. The frame is checkpointed
+    # before the store append, so its plan is read at the checkpoint.
+    import re
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import similarity
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources.tables import load_table
+
+    e = load_table(spark, SF, "embeddings").filter(F.col("vec_id") % 4 == 0)
+    kernel_plans = []
+    checkpoint = type(e).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        if "FlatMapGroupsInPandas" in plan:
+            kernel_plans.append(plan)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(e), "localCheckpoint", spy)
+    store = str(tmp_path / "store")
+    for n in range(2):
+        similarity.incremental_semantic_dedup(
+            spark, e.filter(F.col("vec_id") % 3 == n), store, threshold=0.35, dim=64, n_cells=16
+        )
+    assert len(kernel_plans) == 2
+    for n, plan in enumerate(kernel_plans):
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert len(re.findall(r"Join \[_cell#\d+\]", plan)) == n, plan

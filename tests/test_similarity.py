@@ -553,14 +553,16 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _chain(ids, dim=DIM):
-    """A chain-shaped family: consecutive vectors 60 degrees apart
-    (cosine 0.5), every other pair >= 120 degrees apart (cosine <= -0.5),
-    so only the chain's links clear a 0.3 or 0.4 threshold."""
+def _chain(ids, dim=DIM, step=np.pi / 3):
+    """A chain-shaped family: consecutive unit vectors ``step`` radians
+    apart in one plane. At the default 60 degrees the links have cosine
+    0.5 and every other pair <= -0.5, so only the links clear a 0.3 or
+    0.4 threshold; at 0.38 rad the links have 0.929 and two-step pairs
+    0.725, so only the links clear 0.9."""
     out = []
     for k, i in enumerate(ids):
         v = np.zeros(dim)
-        v[0], v[1] = np.cos(k * np.pi / 3), np.sin(k * np.pi / 3)
+        v[0], v[1] = np.cos(k * step), np.sin(k * step)
         out.append((i, v.tolist()))
     return out
 
@@ -734,3 +736,147 @@ def test_nearest_cell_expr_parity_with_per_cell_literals(spark):
         assert r.new_s == r.old_s and r.new_c == r.old_c
     assert {r.vec_id for r in out if r.new_c is None} == {200, 201}
     assert all(s is None for r in out if r.vec_id >= 200 for s in r.new_s)
+
+
+def test_unit_rows_refusals_name_the_input():
+    """The one refusal helper both pair kernels call keeps the messages
+    the kernel and threshold_pairs_matrix tests above match on, for
+    long (NaN once in pandas), object and string ids; NULL embeddings
+    are skipped, left to the caller."""
+    import pandas as pd
+
+    two = [[1.0, 0.0], [1.0, 0.0]]
+    for ids in (pd.Series([np.nan, 2.0]), np.asarray([None, 2]), pd.Series([None, "2"])):
+        with pytest.raises(ValueError, match="NULL vec_id in cell 3"):
+            similarity._unit_rows(ids, two, "vec_id", " in cell 3")
+        with pytest.raises(ValueError, match="NULL vec_id"):
+            similarity._unit_rows(ids, two, "vec_id")
+    with pytest.raises(ValueError, match="ragged embedding lengths"):
+        similarity._unit_rows(np.asarray([1, 2]), [[1.0, 0.0], [1.0, 0.0, 0.0]], "vec_id")
+    for bad in (5, 7):
+        with pytest.raises(ValueError, match=f"zero-norm embedding at vec_id={bad}"):
+            similarity._unit_rows(np.asarray([1, bad]), [[1.0, 0.0], [0.0, 0.0]], "vec_id")
+    keep, u = similarity._unit_rows(
+        np.asarray([1, 2, 3]), [[3.0, 4.0], None, [0.0, 2.0]], "vec_id"
+    )
+    assert keep.tolist() == [0, 2]
+    np.testing.assert_allclose(u, [[0.6, 0.8], [0.0, 1.0]])
+    keep, u = similarity._unit_rows(np.asarray([4]), [None], "vec_id")
+    assert len(keep) == 0 and u.size == 0
+
+
+# --- incremental_semantic_dedup: in-batch collapse in the kernel ---
+
+
+def _parent_night_admissions(spark, batch, store_path, store_version, thr):
+    """The form the kernel replaced in incremental_semantic_dedup,
+    replayed against the store as of ``store_version``: store match by
+    the intra-cell dot join, then the survivors' intra-cell self-join +
+    dot filter -> dedup.resolve_components, min id keeps."""
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
+
+    cents = snap.read_snapshot(spark, os.path.join(store_path, "centroids"), version=1).collect()
+    centroids = np.asarray([r["centroid"] for r in sorted(cents, key=lambda r: r["cell"])])
+    nb = similarity.assign_cells(batch, centroids, "embedding").select(
+        F.col("vec_id").alias("_nid"), vectors.unit("embedding").alias("_nu"), "_cell"
+    )
+    surv_ids = nb.select(F.col("_nid").alias("vec_id"))
+    if store_version:
+        store = snap.read_snapshot(
+            spark, os.path.join(store_path, "vectors"), version=store_version
+        ).select(F.col("_u").alias("_su"), F.col("cell").alias("_cell"))
+        matched = (
+            nb.join(store, "_cell")
+            .filter(vectors.dot("_nu", "_su") >= thr)
+            .select(F.col("_nid").alias("vec_id"))
+            .distinct()
+        )
+        surv_ids = surv_ids.join(matched, "vec_id", "left_anti")
+    a = nb.join(surv_ids.withColumnRenamed("vec_id", "_nid"), "_nid").select(
+        F.col("_nid").alias("id_a"), F.col("_nu").alias("_ua"), "_cell"
+    )
+    b = a.select(F.col("id_a").alias("id_b"), F.col("_ua").alias("_ub"), "_cell")
+    pairs = (
+        a.join(b, "_cell")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(vectors.dot("_ua", "_ub") >= thr)
+        .select("id_a", "id_b")
+    )
+    drop = {r.doc_id for r in dedup.resolve_components(pairs).collect() if r.doc_id != r.cluster_id}
+    return {r.vec_id for r in surv_ids.collect()} - drop
+
+
+def test_incremental_semantic_dedup_parity_with_pair_join_form(spark, tmp_path):
+    """Per-night admissions equal the parent form's (self-join + dot
+    filter + resolve_components) over three nights: night 0 drops an
+    in-batch near-copy; night 1 drops two store matches and collapses
+    a chain family (min id 110 in the middle of the chain) inside one
+    cell; night 2 drops a near-copy of the admitted chain keeper and
+    admits a near-copy of a dropped chain member."""
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
+
+    rng = np.random.RandomState(5)
+    base = rng.normal(size=(24, DIM))
+
+    def near(v):
+        return (np.asarray(v) + rng.normal(size=DIM) * 0.01).tolist()
+
+    chain = _chain([150, 110, 140, 120, 130], step=0.38)
+    arc = dict(chain)
+    nights = [
+        [(i, base[i].tolist()) for i in range(24)] + [(50, near(base[3]))],
+        [(101, near(base[1])), (102, near(base[2])), (160, rng.normal(size=DIM).tolist())] + chain,
+        [(201, near(arc[110])), (202, near(arc[120])), (260, rng.normal(size=DIM).tolist())],
+    ]
+    want = [set(range(24)), {110, 160}, {202, 260}]
+    store = str(tmp_path / "store")
+    vec_tbl = os.path.join(store, "vectors")
+    for n, rows in enumerate(nights):
+        batch = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        v = snap.current_version(vec_tbl)
+        got = {r.vec_id for r in similarity.incremental_semantic_dedup(
+            spark, batch, store, threshold=0.9, dim=DIM, n_cells=4).collect()}
+        assert got == want[n], n
+        assert got == _parent_night_admissions(spark, batch, store, v, 0.9), n
+        if n == 1:  # the chain family lies inside one cell
+            cents = snap.read_snapshot(spark, os.path.join(store, "centroids"), version=1)
+            centroids = np.asarray([r["centroid"] for r in sorted(cents.collect(), key=lambda r: r["cell"])])
+            cells = similarity.assign_cells(batch.filter(F.col("vec_id").isin(list(arc))), centroids, "embedding")
+            assert len({r._cell for r in cells.collect()}) == 1
+
+
+def test_incremental_semantic_dedup_null_id_raises(spark, tmp_path):
+    """A NULL id reaches the per-cell kernel and raises naming its cell
+    — on the bootstrap night and on a night with a store, where the
+    NULL-id row even matches an admitted vector — for long and string
+    ids; the store takes no commit for the failed night."""
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
+
+    rng = np.random.RandomState(13)
+    base = rng.normal(size=(8, DIM))
+    for id_type, key in (("long", int), ("string", str)):
+        store = str(tmp_path / f"store_{id_type}")
+        vec_tbl = os.path.join(store, "vectors")
+        schema = f"vec_id {id_type}, embedding array<double>"
+        clean = [(key(i), base[i].tolist()) for i in range(8)]
+        n0 = spark.createDataFrame(clean + [(None, rng.normal(size=DIM).tolist())], schema)
+        with pytest.raises(Exception, match="NULL vec_id in cell"):
+            similarity.incremental_semantic_dedup(spark, n0, store, threshold=0.95, dim=DIM, n_cells=2)
+        assert snap.current_version(vec_tbl) == 0
+        similarity.incremental_semantic_dedup(
+            spark, spark.createDataFrame(clean, schema), store, threshold=0.95, dim=DIM, n_cells=2
+        ).collect()
+        n1 = spark.createDataFrame(
+            [(None, (base[0] + rng.normal(size=DIM) * 0.01).tolist()),
+             (key(20), rng.normal(size=DIM).tolist())], schema,
+        )
+        with pytest.raises(Exception, match="NULL vec_id in cell"):
+            similarity.incremental_semantic_dedup(spark, n1, store, threshold=0.95, dim=DIM, n_cells=2)
+        assert snap.current_version(vec_tbl) == 1

@@ -485,107 +485,6 @@ def test_stateful_fold_correct_when_key_spans_many_arrow_chunks(spark, tmp_path)
         assert r.ewma == pytest.approx(cur, rel=1e-12)
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_transform_with_state_twin_equals_apply_in_pandas(spark, tmp_path):
-    """The transformWithState (Spark 4 GA stateful API) twin must emit
-    EXACTLY the rows of the applyInPandasWithState operator over the
-    same multi-batch stream. Its state-server protocol needs protobuf
-    (not in this container) and the RocksDB state-store provider: with
-    protobuf absent we pin the EXACT initialization failure (the Kafka
-    seam-test pattern) so the documented limitation stays true; with it
-    present the full equivalence runs."""
-    import uuid
-
-    from stock_price_prediction_using_stream_and_batch_processing_spark.streaming.stateful import (
-        continuous_trailing_windows_tws,
-    )
-
-    n, seq_len, n_files = 30, 5, 6
-    path = _write_tick_files(tmp_path, n, n_files)
-    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-    def run(factory, ckpt, provider=None):
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-        )
-        if provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-        try:
-            parsed = parse_ticks(file_tick_source(spark, path, max_files_per_trigger=1))
-            q = (
-                factory(parsed)
-                .writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", str(tmp_path / ckpt))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        finally:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        return [
-            (r.symbol, r.timestamp, r.price, tuple(r.window_values))
-            for r in spark.sql(f"SELECT * FROM {name} ORDER BY timestamp, symbol").collect()
-        ]
-
-    if not _has_protobuf():
-        from pyspark.errors.exceptions.captured import StreamingQueryException
-
-        with pytest.raises(StreamingQueryException, match="TransformWithStateInPySpark driver worker"):
-            run(
-                lambda p: continuous_trailing_windows_tws(p, seq_len=seq_len),
-                "ckpt_tws_err",
-                provider=rocksdb,
-            )
-        return
-
-    legacy = run(lambda p: continuous_trailing_windows(p, seq_len=seq_len), "ckpt_legacy")
-    tws = run(
-        lambda p: continuous_trailing_windows_tws(p, seq_len=seq_len),
-        "ckpt_tws",
-        provider=rocksdb,
-    )
-    assert tws == legacy
-
-
-def test_stateful_face_ga_path_has_no_fallback(spark, monkeypatch):
-    """`stream_stateful_trailing_predict` is GA-API-first: with the
-    state server's one dependency (protobuf) present it runs
-    transformWithState and any failure there must PROPAGATE — a
-    fallback papering over a real transformWithState bug would
-    silently change which operator the driver row certifies. The
-    probe is faked present; the GA operator is faked to fail."""
-    import sys
-    import types
-
-    from stock_price_prediction_using_stream_and_batch_processing_spark.plans import streamplans
-    from stock_price_prediction_using_stream_and_batch_processing_spark.streaming import stateful
-
-    fake_google = types.ModuleType("google")
-    fake_pb = types.ModuleType("google.protobuf")
-    fake_google.protobuf = fake_pb
-    monkeypatch.setitem(sys.modules, "google", fake_google)
-    monkeypatch.setitem(sys.modules, "google.protobuf", fake_pb)
-
-    def boom(parsed, seq_len=5):
-        raise RuntimeError("unrelated transformWithState failure")
-
-    monkeypatch.setattr(stateful, "continuous_trailing_windows_tws", boom)
-    with pytest.raises(RuntimeError, match="unrelated transformWithState"):
-        streamplans.stream_stateful_trailing_predict(spark, "/root/testdata/sf0.001")
-
-
 def test_bar_maintenance_stream_equals_batch(spark, tmp_path):
     """The stream-maintained minute-bar table must equal a one-shot
     batch aggregation of all ticks, and a replayed epoch must be a
