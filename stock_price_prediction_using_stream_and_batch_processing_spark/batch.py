@@ -5,21 +5,24 @@ Reference shape (SURVEY §3.2): JDBC-read the latest 10 000 ticks (sort+
 limit pushed into MySQL, ``batch_processor.py:72-79``), collect to
 Pandas, Python-loop length-60 sliding windows, one batched LSTM predict
 (``:88-101``), gated on ≥100 rows (``:121-124``) and ≥60 rows per
-window. Here the whole thing is ONE declarative plan: Parquet scan →
+window. Here the whole thing is ONE declarative plan: Parquet scan
+(with the known ``tick_schema``, so no footer job infers it) →
 ``TakeOrderedAndProject`` top-k → hash exchange by the series key →
-per-key trailing windows → inference — nothing is collected to the
-driver, the double-execution anti-pattern (``count()`` then
-``toPandas`` re-running the query, ``:82,114``) is gone, and the
-scheduler loop stays a thin driver concern (``run_forever``).
+one grouped Arrow kernel per key that builds its sliding windows and
+predicts (``ml.inference.predict_trailing``, the reference's NumPy
+shape run per key) — nothing is collected to the driver, the
+double-execution anti-pattern (``count()`` then ``toPandas``
+re-running the query, ``:82,114``) is gone, and the scheduler loop
+stays a thin driver concern (``run_forever``).
 
 The key exchange is deliberate. ``TakeOrderedAndProject`` emits ONE
-partition, which already satisfies the window's
+partition, which already satisfies the kernel's
 ``ClusteredDistribution(key)``, so without it EnsureRequirements plans
-no exchange and the window sort, ``collect_list`` and the dot product
-run as a single task however many cores the session has. The top-k
-output is at most k rows, so one partition per core
-(``defaultParallelism``) is the useful ceiling at any scale; a
-repartition BY NUMBER is one AQE leaves uncoalesced.
+no exchange and every key's windows and predictions run as a single
+task however many cores the session has. The top-k output is at most k
+rows, so one partition per core (``defaultParallelism``) is the useful
+ceiling at any scale; a repartition BY NUMBER is one AQE leaves
+uncoalesced.
 """
 
 from __future__ import annotations
@@ -30,8 +33,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ml.inference import predict_over_windows
-from .operators import topk, windows
+from .ml.inference import predict_trailing
+from .operators import topk
+from .sources.ticks import tick_schema
 
 
 @dataclass
@@ -65,17 +69,15 @@ def latest_ticks(df: DataFrame, ts: str, k: int = 10000) -> DataFrame:
 def run_once(
     spark: SparkSession,
     ticks_path: str,
-    key: str = "symbol",
-    ts: str = "timestamp",
-    value: str = "price",
     k: int = 10000,
     seq_len: int = 60,
     min_rows: int = 100,
     metrics: BatchMetrics | None = None,
 ) -> DataFrame | None:
-    """One batch run: scan → top-k latest → key exchange → windows →
-    predictions. Returns None when the ``min_rows`` gate fails
-    (reference P0e, ``batch_processor.py:121-124``).
+    """One batch run over a ``tick_schema`` table (symbol, timestamp,
+    price, volume): scan → top-k latest → key exchange → per-symbol
+    windows and predictions. Returns None when the ``min_rows`` gate
+    fails (reference P0e, ``batch_processor.py:121-124``).
 
     The gate needs the top-k's row count, which is exactly
     ``min(k, rows scanned)``, so it never counts the top-k itself (that
@@ -86,15 +88,14 @@ def run_once(
     m = metrics or BatchMetrics()
     t0 = time.time()
     try:
-        ticks = spark.read.parquet(ticks_path)
+        ticks = spark.read.schema(tick_schema).parquet(ticks_path)
         if k < min_rows or len(ticks.select(F.lit(1)).take(min_rows)) < min_rows:
             preds = None
         else:
-            recent = latest_ticks(ticks, ts, k).repartition(
-                spark.sparkContext.defaultParallelism, key
+            recent = latest_ticks(ticks, "timestamp", k).repartition(
+                spark.sparkContext.defaultParallelism, "symbol"
             )
-            win = windows.trailing_collect(recent, key, ts, value, seq_len, tiebreak=ts, full_only=True)
-            preds = predict_over_windows(win, "window_values", seq_len=seq_len)
+            preds = predict_trailing(recent, "symbol", "timestamp", "price", seq_len)
         m.runs += 1
         return preds
     except Exception:

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve via __globals__
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
@@ -320,6 +320,20 @@ def _union_min(parent: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
             parent = jumped
 
 
+def _zero_norm_refusal(id_col: str, at, detail: str = ""):
+    """The zero-norm refusal message, one wording for the NumPy kernels
+    (``at`` an id value; returns a str) and the column guard (``at`` a
+    string Column; returns a Column for ``F.raise_error``)."""
+    parts = (
+        f"zero-norm embedding at {id_col}=",
+        at,
+        f"{detail} — cosine is undefined; filter or re-embed degenerate vectors first",
+    )
+    if isinstance(at, Column):
+        return F.concat(*(p if isinstance(p, Column) else F.lit(p) for p in parts))
+    return "".join(map(str, parts))
+
+
 def _unit_rows(ids, vals: list, id_col: str, where: str = "") -> tuple[np.ndarray, np.ndarray]:
     """The input refusals of the embedding pair kernels, in one place.
     ``ids`` (array-like) and ``vals`` (embedding lists, None for a NULL
@@ -351,11 +365,7 @@ def _unit_rows(ids, vals: list, id_col: str, where: str = "") -> tuple[np.ndarra
     norms = np.linalg.norm(m, axis=1)
     zero = np.nonzero(norms == 0.0)[0]
     if len(zero):
-        raise ValueError(
-            f"zero-norm embedding at {id_col}={kept_ids[zero[0]]} ({len(zero)} "
-            f"such row(s){where}) — cosine is undefined; filter or re-embed "
-            "degenerate vectors first"
-        )
+        raise ValueError(_zero_norm_refusal(id_col, kept_ids[zero[0]], f" ({len(zero)} such row(s){where})"))
     return keep, m / norms[:, None]
 
 
@@ -546,11 +556,16 @@ def incremental_semantic_dedup(
     retention for free:
 
     - ``centroids/`` — the k-means coarse quantizer as a snapshot
-      table (cell, centroid), committed ONCE on the first batch and
-      FROZEN: later nights read VERSION 1 explicitly, so even a racing
-      second commit could never silently reshuffle cells and
-      invalidate admitted assignments (the IVF convention). k*dim
-      doubles — metadata-sized.
+      table (cell, centroid), committed ONCE, by the first night that
+      admits its batch, and FROZEN: later nights read VERSION 1
+      explicitly, so even a racing second commit could never silently
+      reshuffle cells and invalidate admitted assignments (the IVF
+      convention). k*dim doubles — metadata-sized. The bootstrap night
+      trains it in memory and publishes it only after the night's
+      refusals have run and before the vectors append: a refused
+      bootstrap batch leaves no quantizer behind, and a crash between
+      the two appends replays as a night that reads the published v1
+      (trained from the same batch and seed).
     - ``vectors/`` — admitted (id, embedding, _u, cell, night) rows,
       PARTITIONED BY cell so each night's candidate join reads ONLY
       the cells the new batch occupies (set-valued
@@ -566,9 +581,9 @@ def incremental_semantic_dedup(
     fold per pair); (3) store-matched new vectors drop (an anti join);
     (4) the survivors' in-batch matches collapse inside the per-cell
     matmul kernel (``_cell_components``: exact, since every pair lies in
-    one cell; min-id keeper) — a NULL id raises there, naming its cell;
-    (5) admitted rows append to the store's cell partitions in ONE
-    atomic commit.
+    one cell; min-id keeper) — a NULL id raises there, naming its cell,
+    and a zero-norm embedding raises naming its id; (5) admitted rows
+    append to the store's cell partitions in ONE atomic commit.
 
     EXACTLY-ONCE: pass ``writer_id`` + ``batch_id`` (the night number)
     and the store append rides the snapshot store's per-writer epoch
@@ -615,7 +630,8 @@ def incremental_semantic_dedup(
             )
             return new_vecs.join(replay_ids, id_col, "semi").select(*in_cols)
 
-    if snap.current_version(cent_tbl) == 0:
+    bootstrap = snap.current_version(cent_tbl) == 0
+    if bootstrap:
         # target_cell_size (the measured const-cell-size policy — see
         # semantic_dedup) sizes the quantizer from the BOOTSTRAP batch:
         # centroids freeze at v1, so the first night's count is the
@@ -625,25 +641,28 @@ def incremental_semantic_dedup(
             n = new_vecs.count()
             n_cells = max(1, min(n, -(-n // target_cell_size)))
         _, centroids = ivf_build(new_vecs, dim, n_cells, vec_col, seed)
-        snap.snapshot_append(
-            spark,
-            cent_tbl,
-            spark.createDataFrame(
-                [(int(i), c.tolist()) for i, c in enumerate(centroids)],
-                "cell int, centroid array<double>",
-            ),
-            stats_cols=["cell"],
+    else:
+        # ALWAYS read version 1 — the quantizer is frozen by
+        # construction, not by hoping nobody appended
+        cent_rows = snap.read_snapshot(spark, cent_tbl, version=1).collect()
+        centroids = np.asarray(
+            [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])]
         )
-    # ALWAYS read version 1 — the quantizer is frozen by construction,
-    # not by hoping nobody appended
-    cent_rows = snap.read_snapshot(spark, cent_tbl, version=1).collect()
-    centroids = np.asarray(
-        [r["centroid"] for r in sorted(cent_rows, key=lambda r: r["cell"])]
-    )
 
+    # vectors.unit's form, with the norm folded once into a column that
+    # both refuses a zero-norm row by id (instead of an ANSI
+    # DIVIDE_BY_ZERO) and divides every element
+    norm = F.col("_norm")
+    at = F.coalesce(F.col(id_col).cast("string"), F.lit("NULL"))
     assigned = (
         assign_cells(new_vecs, centroids, vec_col)
-        .withColumn("_u", vectors.unit(vec_col))
+        .withColumn("_norm", vectors.norm(vec_col))
+        .withColumn(
+            "_u",
+            F.when(norm == 0, F.raise_error(_zero_norm_refusal(id_col, at)))
+            .otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double") / norm)),
+        )
+        .drop("_norm")
         .localCheckpoint(eager=False)
     )
     survivors = assigned
@@ -677,6 +696,23 @@ def incremental_semantic_dedup(
         .select(id_col)
     )
     admitted = assigned.join(keepers, id_col, "left_semi").localCheckpoint(eager=True)
+    # the night is decided (every refusal fires in the checkpoint
+    # above): only now does a bootstrap night publish its quantizer
+    if bootstrap:
+        published = snap.snapshot_append(
+            spark,
+            cent_tbl,
+            spark.createDataFrame(
+                [(int(i), c.tolist()) for i, c in enumerate(centroids)],
+                "cell int, centroid array<double>",
+            ),
+            stats_cols=["cell"],
+        )
+        if published != 1:
+            raise RuntimeError(
+                f"{cent_tbl}: another bootstrap night published the quantizer "
+                "first; rerun this night against it"
+            )
     snap.snapshot_append(
         spark,
         vec_store,

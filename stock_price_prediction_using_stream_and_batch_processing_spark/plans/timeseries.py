@@ -361,9 +361,10 @@ def asof_join_purchase_error(spark, sf_dir):
 @register("predict_next_events", oracle=_PRED5_SQL, tags=("inference", "window", "timeseries"))
 def predict_next_events(spark, sf_dir):
     """The full inference path (reference W1+E4): trailing-5 window ->
-    min-max scale (native) -> batched model UDF (Arrow) -> unscale
-    (native). The linear fallback model makes it oracle-checkable; the
-    Keras path swaps in via ``keras_path`` without changing the plan."""
+    min-max scale -> linear model -> unscale, all as one native column
+    expression (``predict_over_windows``' column path; no Python
+    boundary). The linear fallback model makes it oracle-checkable; a
+    ``keras_path`` swaps the model step for the Arrow-batched UDF."""
     ev = load_table(spark, sf_dir, "events")
     win = windows.trailing_collect(ev, "user_id", "ts", "value", 5, tiebreak="event_id")
     pred = predict_over_windows(win, "window_values", seq_len=5)
@@ -437,7 +438,7 @@ def predict_sliding60_events(spark, sf_dir):
     ``batch_processor.py:88-101``) through the same distributed path as
     ``predict_next_events``. Oracle exploits the affine identity
     unscale(model(scale(v))) == Σ wᵢ·vᵢ of the linear fallback, so the
-    Arrow UDF is value-checked at the reference's real window length."""
+    column path is value-checked at the reference's real window length."""
     ev = load_table(spark, sf_dir, "events")
     win = windows.trailing_collect(ev, "user_id", "ts", "value", 60, tiebreak="event_id")
     pred = predict_over_windows(win, "window_values", seq_len=60)

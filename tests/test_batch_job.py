@@ -4,11 +4,19 @@ metrics (SURVEY §3.2)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import numpy as np
 import pytest
 
 from stock_price_prediction_using_stream_and_batch_processing_spark import batch
-from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import generate_ticks, ticks_dataframe
+from stock_price_prediction_using_stream_and_batch_processing_spark.ml.inference import predict_over_windows
+from stock_price_prediction_using_stream_and_batch_processing_spark.operators import windows
+from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import (
+    generate_ticks,
+    tick_schema,
+    ticks_dataframe,
+)
 from tests.test_reference_parity import numpy_predict
 
 
@@ -49,6 +57,70 @@ def test_run_once_multi_symbol_matches_per_symbol_mirror(spark, tmp_path):
         want = numpy_predict([t["price"] for t in latest if t["symbol"] == sym], 60)
         assert len(got[sym]) == len(want) > 0, sym
         np.testing.assert_allclose(got[sym], want, rtol=1e-12)
+
+
+def _window_form(spark, path, k, seq_len):
+    """The form ``predict_trailing`` replaced in ``run_once``: the top-k
+    by key, ``trailing_collect(full_only=True)`` arrays, then the
+    ``predict_over_windows`` column fold."""
+    ticks = spark.read.schema(tick_schema).parquet(path)
+    recent = batch.latest_ticks(ticks, "timestamp", k).repartition(
+        spark.sparkContext.defaultParallelism, "symbol"
+    )
+    win = windows.trailing_collect(recent, "symbol", "timestamp", "price", seq_len, tiebreak="timestamp")
+    return predict_over_windows(win, "window_values", seq_len=seq_len)
+
+
+def _keyed(df):
+    rows = df.select("symbol", "timestamp", "volume", "predicted_price").collect()
+    return {(r.symbol, r.timestamp, r.volume): r.predicted_price for r in rows}
+
+
+def test_run_once_matches_trailing_collect_form(spark, tmp_path):
+    # uneven symbols (A 200 rows, B 120, C 59 < seq_len), a NULL price
+    # (drops every window that covers it), a NaN price (NaN predictions),
+    # a NULL timestamp (sorts first, inside the latest k only because k
+    # covers the whole table) and a NULL symbol (its own group); volume
+    # is a unique row id, since a NULL timestamp cannot key a row
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rng = np.random.default_rng(7)
+    rows, vid = [], 0
+    for sym, n in (("A", 200), ("B", 120), ("C", 59), (None, 75)):
+        for i in range(n):
+            rows.append([sym, t0 + dt.timedelta(seconds=vid), float(np.round(180 + rng.normal(), 2)), vid])
+            vid += 1
+    rows[30][2] = None      # A: windows ending at rows 30..89 drop
+    rows[150][2] = float("nan")  # A: windows ending at 150..199 are NaN
+    rows[230][1] = None     # B: a NULL timestamp sorts first
+    rows[300][2] = None     # B: windows ending at sorted rows 100..119 drop
+    p = str(tmp_path / "edge")
+    spark.createDataFrame([tuple(r) for r in rows], tick_schema).write.parquet(p)
+    k = len(rows)
+    got = _keyed(batch.run_once(spark, p, k=k, seq_len=60, min_rows=100))
+    want = _keyed(_window_form(spark, p, k, 60))
+    assert got.keys() == want.keys()
+    assert {s for s, _, _ in got} == {"A", "B", None}  # C is shorter than 60
+    assert len(got) == 110 + 41 + 16
+    g = np.array([got[key] for key in want])
+    w = np.array(list(want.values()))
+    assert np.array_equal(np.isnan(g), np.isnan(w)) and np.isnan(w).sum() == 50
+    np.testing.assert_allclose(g[~np.isnan(g)], w[~np.isnan(w)], rtol=1e-12)
+
+
+def test_run_once_runs_only_the_gate_job(spark, tmp_path):
+    # the read schema is given, so no footer job infers it: the gate's
+    # bounded take is the one job run_once runs before it returns (one
+    # file, so the take's first partition already holds min_rows rows)
+    p = str(tmp_path / "one_file")
+    ticks_dataframe(spark, 300).coalesce(1).write.parquet(p)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_once_jobs", "run_once job count")
+    try:
+        preds = batch.run_once(spark, p, k=200, seq_len=60, min_rows=100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert preds is not None
+    assert len(sc.statusTracker().getJobIdsForGroup("run_once_jobs")) == 1
 
 
 def test_min_rows_gate(spark, ticks_path, tmp_path):

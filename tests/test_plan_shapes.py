@@ -157,10 +157,11 @@ def test_tiny_batch_coalesce_eliminates_window_exchange(spark):
 
 def test_batch_job_spreads_topk_over_cores_by_key(spark, tmp_path):
     # TakeOrderedAndProject emits ONE partition, which would satisfy the
-    # window's ClusteredDistribution(symbol) with no exchange at all and
-    # run the whole job as one task; run_once hash-repartitions the
-    # top-k by the key into defaultParallelism partitions BY NUMBER, so
-    # AQE keeps them, and the window runs one task per core.
+    # grouped kernel's ClusteredDistribution(symbol) with no exchange at
+    # all and run the whole job as one task; run_once hash-repartitions
+    # the top-k by the key into defaultParallelism partitions BY NUMBER,
+    # so AQE keeps them, and the per-key Arrow kernel (no Window) runs
+    # one task per core.
     import re
 
     from stock_price_prediction_using_stream_and_batch_processing_spark import batch
@@ -178,9 +179,10 @@ def test_batch_job_spreads_topk_over_cores_by_key(spark, tmp_path):
     lines = plan.splitlines()
     pos = {
         op: next(i for i, ln in enumerate(lines) if op in ln)
-        for op in ("Window", "Exchange", "TakeOrderedAndProject")
+        for op in ("FlatMapGroupsInArrow", "Exchange", "TakeOrderedAndProject")
     }
-    assert pos["Window"] < pos["Exchange"] < pos["TakeOrderedAndProject"], plan
+    assert pos["FlatMapGroupsInArrow"] < pos["Exchange"] < pos["TakeOrderedAndProject"], plan
+    assert "Window" not in plan, plan
     # after execution AQE has not coalesced the key partitions
     preds.collect()
     final = preds._jdf.queryExecution().executedPlan().toString()

@@ -850,11 +850,32 @@ def test_incremental_semantic_dedup_parity_with_pair_join_form(spark, tmp_path):
             assert len({r._cell for r in cells.collect()}) == 1
 
 
+def _refused_bootstrap_then_retry(spark, tmp_path, name, bad, clean, match):
+    """A bootstrap night over ``bad`` raises ``match`` and leaves no
+    commit in either table, so the corrected retry over ``clean`` is
+    the night that trains and publishes the quantizer (version 1), and
+    it admits every row."""
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
+
+    store = str(tmp_path / name)
+    with pytest.raises(Exception, match=match):
+        similarity.incremental_semantic_dedup(spark, bad, store, threshold=0.95, dim=DIM, n_cells=2)
+    assert snap.current_version(os.path.join(store, "centroids")) == 0
+    assert snap.current_version(os.path.join(store, "vectors")) == 0
+    got = similarity.incremental_semantic_dedup(spark, clean, store, threshold=0.95, dim=DIM, n_cells=2)
+    assert got.count() == clean.count()
+    assert snap.current_version(os.path.join(store, "centroids")) == 1
+    return store
+
+
 def test_incremental_semantic_dedup_null_id_raises(spark, tmp_path):
     """A NULL id reaches the per-cell kernel and raises naming its cell
     — on the bootstrap night and on a night with a store, where the
     NULL-id row even matches an admitted vector — for long and string
-    ids; the store takes no commit for the failed night."""
+    ids; the store takes no commit for the failed night, and a refused
+    bootstrap night publishes no quantizer."""
     import os
 
     from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
@@ -862,17 +883,14 @@ def test_incremental_semantic_dedup_null_id_raises(spark, tmp_path):
     rng = np.random.RandomState(13)
     base = rng.normal(size=(8, DIM))
     for id_type, key in (("long", int), ("string", str)):
-        store = str(tmp_path / f"store_{id_type}")
-        vec_tbl = os.path.join(store, "vectors")
         schema = f"vec_id {id_type}, embedding array<double>"
         clean = [(key(i), base[i].tolist()) for i in range(8)]
         n0 = spark.createDataFrame(clean + [(None, rng.normal(size=DIM).tolist())], schema)
-        with pytest.raises(Exception, match="NULL vec_id in cell"):
-            similarity.incremental_semantic_dedup(spark, n0, store, threshold=0.95, dim=DIM, n_cells=2)
-        assert snap.current_version(vec_tbl) == 0
-        similarity.incremental_semantic_dedup(
-            spark, spark.createDataFrame(clean, schema), store, threshold=0.95, dim=DIM, n_cells=2
-        ).collect()
+        store = _refused_bootstrap_then_retry(
+            spark, tmp_path, f"store_{id_type}", n0, spark.createDataFrame(clean, schema),
+            "NULL vec_id in cell",
+        )
+        vec_tbl = os.path.join(store, "vectors")
         n1 = spark.createDataFrame(
             [(None, (base[0] + rng.normal(size=DIM) * 0.01).tolist()),
              (key(20), rng.normal(size=DIM).tolist())], schema,
@@ -880,3 +898,57 @@ def test_incremental_semantic_dedup_null_id_raises(spark, tmp_path):
         with pytest.raises(Exception, match="NULL vec_id in cell"):
             similarity.incremental_semantic_dedup(spark, n1, store, threshold=0.95, dim=DIM, n_cells=2)
         assert snap.current_version(vec_tbl) == 1
+
+
+def test_incremental_semantic_dedup_zero_norm_raises_by_id(spark, tmp_path):
+    """A zero-norm embedding is refused naming its id, not as an ANSI
+    DIVIDE_BY_ZERO: on the bootstrap night (no quantizer published, the
+    corrected retry bootstraps normally) and on a night with a store
+    (no commit)."""
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
+
+    rng = np.random.RandomState(17)
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame([(i, rng.normal(size=DIM).tolist()) for i in range(8)], schema)
+    zero = spark.createDataFrame([(99, [0.0] * DIM)], schema)
+    store = _refused_bootstrap_then_retry(
+        spark, tmp_path, "store", clean.unionByName(zero), clean, "zero-norm embedding at vec_id=99",
+    )
+    n1 = spark.createDataFrame([(20, rng.normal(size=DIM).tolist())], schema).unionByName(zero)
+    with pytest.raises(Exception, match="zero-norm embedding at vec_id=99"):
+        similarity.incremental_semantic_dedup(spark, n1, store, threshold=0.95, dim=DIM, n_cells=2)
+    assert snap.current_version(os.path.join(store, "vectors")) == 1
+    assert snap.current_version(os.path.join(store, "centroids")) == 1
+
+
+def test_incremental_semantic_dedup_bootstrap_race_refuses(spark, tmp_path, monkeypatch):
+    """Two bootstrap nights racing: the one that publishes its quantizer
+    second (version 2, which no night reads) raises before appending
+    any vector assigned with it."""
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
+
+    rng = np.random.RandomState(19)
+    store = str(tmp_path / "store")
+    cent_tbl = os.path.join(store, "centroids")
+    batch = spark.createDataFrame(
+        [(i, rng.normal(size=DIM).tolist()) for i in range(8)], "vec_id long, embedding array<double>"
+    )
+    real_build = similarity.ivf_build
+
+    def build_then_lose_the_race(*args, **kw):
+        out = real_build(*args, **kw)
+        snap.snapshot_append(
+            spark, cent_tbl,
+            spark.createDataFrame([(0, [1.0] * DIM)], "cell int, centroid array<double>"),
+        )
+        return out
+
+    monkeypatch.setattr(similarity, "ivf_build", build_then_lose_the_race)
+    with pytest.raises(RuntimeError, match="another bootstrap night published the quantizer"):
+        similarity.incremental_semantic_dedup(spark, batch, store, threshold=0.95, dim=DIM, n_cells=2)
+    assert snap.current_version(cent_tbl) == 2
+    assert snap.current_version(os.path.join(store, "vectors")) == 0
