@@ -7,22 +7,15 @@ Pandas, Python-loop length-60 sliding windows, one batched LSTM predict
 (``:88-101``), gated on ≥100 rows (``:121-124``) and ≥60 rows per
 window. Here the whole thing is ONE declarative plan: Parquet scan
 (with the known ``tick_schema``, so no footer job infers it) →
-``TakeOrderedAndProject`` top-k → hash exchange by the series key →
-one grouped Arrow kernel per key that builds its sliding windows and
-predicts (``ml.inference.predict_trailing``, the reference's NumPy
-shape run per key) — nothing is collected to the driver, the
-double-execution anti-pattern (``count()`` then ``toPandas``
-re-running the query, ``:82,114``) is gone, and the scheduler loop
-stays a thin driver concern (``run_forever``).
-
-The key exchange is deliberate. ``TakeOrderedAndProject`` emits ONE
-partition, which already satisfies the kernel's
-``ClusteredDistribution(key)``, so without it EnsureRequirements plans
-no exchange and every key's windows and predictions run as a single
-task however many cores the session has. The top-k output is at most k
-rows, so one partition per core (``defaultParallelism``) is the useful
-ceiling at any scale; a repartition BY NUMBER is one AQE leaves
-uncoalesced.
+``TakeOrderedAndProject`` top-k, which emits one partition → one Arrow
+pass over that partition that sorts it by symbol, cuts every sliding
+window and predicts (``ml.inference.predict_trailing``, the reference's
+NumPy shape). There is no exchange and one Python task: every Python
+task pays a floor (0.34–0.43 s on a 4-vCPU host) that dwarfs the
+~20 ms kernel, so one task beats one per core. Nothing is collected to
+the driver, the double-execution anti-pattern (``count()`` then
+``toPandas`` re-running the query, ``:82,114``) is gone, and the
+scheduler loop stays a thin driver concern (``run_forever``).
 """
 
 from __future__ import annotations
@@ -63,7 +56,7 @@ def latest_ticks(df: DataFrame, ts: str, k: int = 10000) -> DataFrame:
     (``batch_processor.py:76``) as a native plan: Catalyst compiles
     orderBy+limit to ``TakeOrderedAndProject`` (per-partition top-k,
     then a k-row merge — no global sort even at 100 TB)."""
-    return topk.latest_k(df, ts, k, tiebreak=ts)
+    return topk.latest_k(df, ts, k)
 
 
 def run_once(
@@ -75,26 +68,25 @@ def run_once(
     metrics: BatchMetrics | None = None,
 ) -> DataFrame | None:
     """One batch run over a ``tick_schema`` table (symbol, timestamp,
-    price, volume): scan → top-k latest → key exchange → per-symbol
-    windows and predictions. Returns None when the ``min_rows`` gate
-    fails (reference P0e, ``batch_processor.py:121-124``).
+    price, volume): scan → top-k latest → one Arrow pass for every
+    symbol's windows and predictions. Returns None when the
+    ``min_rows`` gate fails (reference P0e, ``batch_processor.py:121-124``).
 
     The gate needs the top-k's row count, which is exactly
     ``min(k, rows scanned)``, so it never counts the top-k itself (that
     would run the scan and the sort a second time): it fails at once
     when ``k < min_rows``, and otherwise takes at most ``min_rows``
-    column-less rows from the scan — one job that stops reading once
-    it has them, whatever the table's size."""
+    column-less rows from the scan coalesced to one partition — one job
+    that stops reading once it has them, however many files the table
+    has (a plain ``take`` reads one partition, then scales up)."""
     m = metrics or BatchMetrics()
     t0 = time.time()
     try:
         ticks = spark.read.schema(tick_schema).parquet(ticks_path)
-        if k < min_rows or len(ticks.select(F.lit(1)).take(min_rows)) < min_rows:
+        if k < min_rows or len(ticks.select(F.lit(1)).coalesce(1).take(min_rows)) < min_rows:
             preds = None
         else:
-            recent = latest_ticks(ticks, "timestamp", k).repartition(
-                spark.sparkContext.defaultParallelism, "symbol"
-            )
+            recent = latest_ticks(ticks, "timestamp", k)
             preds = predict_trailing(recent, "symbol", "timestamp", "price", seq_len)
         m.runs += 1
         return preds

@@ -16,18 +16,22 @@ and share nothing beyond ``LinearWindowModel``:
 
 - ``predict_over_windows`` (column path: ``trailing_collect`` arrays
   folded by ``linear_predict_column``) for the registered plans and the
-  streams, whose events tables hold many small per-key groups;
-- ``predict_trailing`` (one grouped Arrow kernel per key) for the batch
-  job, whose top-k holds few keys with thousands of rows each.
+  streams, whose events tables are unbounded and hold many small
+  per-key groups;
+- ``predict_trailing`` (one Arrow pass over a single partition, not one
+  per key) for the batch job, whose input is its k-row top-k.
 
-Measured at sf0.1 on the events table (100k rows, 4-vCPU host, median
-of 5 warm runs), the per-key kernel loses there: ``predict_next_events``
+The Arrow pass holds its whole input in one Python worker, so the
+registered plans cannot take it. Its earlier per-key grouped form
+(``applyInArrow``) lost there too, at sf0.1 on the events table (100k
+rows, 4-vCPU host, median of 5 warm runs): ``predict_next_events``
 0.82 s on the column path vs 2.17 s per key; ``predict_sliding60_events``
-0.72 vs 1.42 s. A sorted ``mapInArrow`` form was no faster than the
-column path either.
+0.72 vs 1.42 s.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -129,52 +133,55 @@ def predict_over_windows(
     return df.withColumn(out, minmax_unscale(udf(scaled), mn, mx))
 
 
-def predict_trailing(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    value: str,
-    seq_len: int,
-) -> DataFrame:
-    """Sliding-``seq_len`` linear predictions per ``key`` in ONE grouped
-    Arrow kernel (``applyInArrow``): each group is sorted by ``ts``,
-    scaled with the reference scaler, cut into its sliding windows
-    (``sliding_window_view``) and scored with one batched
-    ``LinearWindowModel.predict`` — the reference batch job's NumPy
-    shape (``batch_processor.py:88-101``), once per key. Returns the
-    input rows that end a full window, plus ``predicted_price``.
+def trailing_kernel(batches: Iterable[pa.RecordBatch], key: str, ts: str, value: str, seq_len: int):
+    """``predict_trailing``'s pure-Arrow kernel over one partition's
+    record batches: yields the rows that end a full window of one key,
+    plus ``predicted_price``."""
+    mn, mx = REFERENCE_SCALER_MIN, REFERENCE_SCALER_MAX
+    batches = list(batches)
+    n = sum(b.num_rows for b in batches)
+    if n < seq_len:
+        return
+    tbl = pa.Table.from_batches(batches)
+    tbl = tbl.take(pc.sort_indices(tbl, [(key, "ascending"), (ts, "ascending")], null_placement="at_start"))
+    # a key's rows are contiguous now; a NULL key is one more group
+    seg = pc.fill_null(pc.dictionary_encode(tbl.column(key).combine_chunks()).indices, -1).to_numpy()
+    col = tbl.column(value)
+    nulls = np.concatenate([[0], np.cumsum(col.is_null().to_numpy(zero_copy_only=False))])
+    # window j covers rows j .. j+seq_len-1: keep those in one key with no NULL
+    end = n - seq_len + 1
+    keep = np.nonzero((seg[seq_len - 1 :] == seg[:end]) & (nulls[seq_len:] == nulls[:end]))[0]
+    x = (col.cast(pa.float64()).to_numpy(zero_copy_only=False) - mn) / (mx - mn)
+    pred = LinearWindowModel(seq_len).predict(sliding_window_view(x, seq_len)[keep]) * (mx - mn) + mn
+    yield from tbl.take(keep + (seq_len - 1)).append_column("predicted_price", pa.array(pred)).to_batches()
+
+
+def predict_trailing(df: DataFrame, key: str, ts: str, value: str, seq_len: int) -> DataFrame:
+    """Sliding-``seq_len`` linear predictions per ``key`` in ONE Arrow
+    pass over ONE partition (``df.coalesce(1).mapInArrow``):
+    ``trailing_kernel`` sorts the rows by (key, ts), cuts every key's
+    sliding windows with one ``sliding_window_view`` and scores them
+    with one batched ``LinearWindowModel.predict`` — the reference batch
+    job's NumPy shape (``batch_processor.py:88-101``). Returns the input
+    rows that end a full window, plus ``predicted_price``.
 
     Same answers as ``trailing_collect(full_only=True)`` +
     ``predict_over_windows``:
-    - rows sort NULLs first, as the window's ascending ORDER BY does;
+    - rows sort NULLs first, as the window's ascending ORDER BY does,
+      and a NULL key is one group, as under ``groupBy``;
     - a NULL value drops every window that covers it (``collect_list``
       skips NULLs, so the ``size == seq_len`` filter drops those rows);
       Arrow keeps NULL apart from NaN, which pandas would not;
     - a NaN value gives NaN predictions;
-    - a group shorter than ``seq_len`` emits nothing.
+    - a key shorter than ``seq_len`` emits nothing.
     Only the summation order differs (BLAS vs a sequential fold):
     O(seq_len·ulp) relative.
 
-    Each key's whole group is one Arrow table in one Python worker, so
-    the input must be bounded per key: the batch job feeds its top-k, at
-    most k rows, which already sit in one partition before the key
-    exchange. On an unbounded history use the column path, which
-    streams the window. For many small keys the column path is also
-    faster (module docstring)."""
-    out, mn, mx = "predicted_price", REFERENCE_SCALER_MIN, REFERENCE_SCALER_MAX
-    schema = T.StructType(df.schema.fields + [T.StructField(out, T.DoubleType())])
-    model = LinearWindowModel(seq_len)
-
-    def predict_group(tbl: pa.Table) -> pa.Table:
-        tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[(ts, "ascending")], null_placement="at_start"))
-        if tbl.num_rows < seq_len:
-            return tbl.slice(0, 0).append_column(out, pa.array([], pa.float64()))
-        col = tbl.column(value)
-        nulls = np.concatenate([[0], np.cumsum(col.is_null().to_numpy(zero_copy_only=False))])
-        # window j covers rows j .. j+seq_len-1; keep those with no NULL
-        full = np.nonzero(nulls[seq_len:] == nulls[: len(nulls) - seq_len])[0]
-        x = (col.cast(pa.float64()).to_numpy(zero_copy_only=False) - mn) / (mx - mn)
-        pred = model.predict(sliding_window_view(x, seq_len)[full]) * (mx - mn) + mn
-        return tbl.take(full + (seq_len - 1)).append_column(out, pa.array(pred, pa.float64()))
-
-    return df.groupBy(key).applyInArrow(predict_group, schema)
+    Memory bound: the whole input is one Arrow table in one Python
+    worker; ``coalesce(1)`` is what makes the kernel correct on any
+    input. Feed it a bounded frame: the batch job's top-k is at most k
+    rows, which ``TakeOrderedAndProject`` already holds in one task, so
+    the coalesce is free there. On an unbounded history use the column
+    path, which streams the window."""
+    schema = T.StructType(df.schema.fields + [T.StructField("predicted_price", T.DoubleType())])
+    return df.coalesce(1).mapInArrow(lambda it: trailing_kernel(it, key, ts, value, seq_len), schema)

@@ -18,9 +18,11 @@ def top_k(df: DataFrame, k: int, *order_cols) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
-def latest_k(df: DataFrame, ts: str, k: int, tiebreak: str) -> DataFrame:
-    """The reference's 'last 10 000 ticks' fetch, tie-broken."""
-    return df.orderBy(F.col(ts).desc(), F.col(tiebreak).desc()).limit(k)
+def latest_k(df: DataFrame, ts: str, k: int, tiebreak: str | None = None) -> DataFrame:
+    """The reference's 'last 10 000 ticks' fetch, tie-broken by
+    ``tiebreak`` when given (otherwise ordered by ``ts`` alone)."""
+    order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
+    return df.orderBy(*order).limit(k)
 
 
 def top_k_per_group(df: DataFrame, key: str, k: int, *order_cols) -> DataFrame:

@@ -5,12 +5,18 @@ metrics (SURVEY §3.2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from stock_price_prediction_using_stream_and_batch_processing_spark import batch
-from stock_price_prediction_using_stream_and_batch_processing_spark.ml.inference import predict_over_windows
+from stock_price_prediction_using_stream_and_batch_processing_spark.ml.inference import (
+    predict_over_windows,
+    predict_trailing,
+    trailing_kernel,
+)
 from stock_price_prediction_using_stream_and_batch_processing_spark.operators import windows
 from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import (
     generate_ticks,
@@ -40,9 +46,9 @@ def test_run_once_matches_numpy_mirror(spark, ticks_path):
 
 def test_run_once_multi_symbol_matches_per_symbol_mirror(spark, tmp_path):
     # 7 symbols, round-robin ticks: the latest 1003 of 1400 cut the
-    # symbols unevenly (144 or 143 ticks each), and the key exchange
-    # spreads them over the session's cores; every symbol must still
-    # see exactly its own trailing windows
+    # symbols unevenly (144 or 143 ticks each), and one Arrow pass
+    # windows them all together; every symbol must still see exactly
+    # its own trailing windows
     symbols = ("AAPL", "AMZN", "GOOG", "META", "MSFT", "NVDA", "TSLA")
     n, k = 1400, 1003
     p = str(tmp_path / "multi")
@@ -109,18 +115,22 @@ def test_run_once_matches_trailing_collect_form(spark, tmp_path):
 
 def test_run_once_runs_only_the_gate_job(spark, tmp_path):
     # the read schema is given, so no footer job infers it: the gate's
-    # bounded take is the one job run_once runs before it returns (one
-    # file, so the take's first partition already holds min_rows rows)
-    p = str(tmp_path / "one_file")
-    ticks_dataframe(spark, 300).coalesce(1).write.parquet(p)
+    # bounded take is the one job run_once runs before it returns, on
+    # one file and on four 75-row files (a take over the scan's own
+    # partitions would read one, find too few rows and scale up)
     sc = spark.sparkContext
-    sc.setJobGroup("run_once_jobs", "run_once job count")
-    try:
-        preds = batch.run_once(spark, p, k=200, seq_len=60, min_rows=100)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert preds is not None
-    assert len(sc.statusTracker().getJobIdsForGroup("run_once_jobs")) == 1
+    for files in (1, 4):
+        p = str(tmp_path / f"files_{files}")
+        ticks_dataframe(spark, 300).repartition(files).write.parquet(p)
+        assert len([f for f in os.listdir(p) if f.endswith(".parquet")]) == files
+        group = f"run_once_jobs_{files}"
+        sc.setJobGroup(group, "run_once job count")
+        try:
+            preds = batch.run_once(spark, p, k=200, seq_len=60, min_rows=100)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert preds is not None
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, files
 
 
 def test_min_rows_gate(spark, ticks_path, tmp_path):
@@ -168,3 +178,80 @@ def test_failure_path_counts(spark, tmp_path):
     with pytest.raises(Exception):
         batch.run_once(spark, str(tmp_path / "nonexistent"), metrics=m)
     assert m.failures == 1 and m.runs == 0
+
+
+# --------------------------------------------------------------------------
+# predict_trailing's kernel, called on Arrow batches without Spark
+
+_KSCHEMA = pa.schema([("symbol", pa.string()), ("timestamp", pa.int64()), ("price", pa.float64())])
+
+
+def _kernel(batches, seq_len):
+    out = list(trailing_kernel(iter(batches), "symbol", "timestamp", "price", seq_len))
+    return pa.Table.from_batches(out) if out else None
+
+
+def _per_key(tbl):
+    got = {}
+    for r in tbl.sort_by("timestamp").to_pylist():
+        got.setdefault(r["symbol"], []).append((r["timestamp"], r["predicted_price"]))
+    return got
+
+
+def test_kernel_windows_keys_interleaved_across_batches():
+    # three keys interleaved row by row, shuffled, cut into uneven
+    # batches: each key sees its own ts-ordered windows only
+    rng = np.random.default_rng(3)
+    keys = ["A", "B", "C"]
+    n, seq_len = 90, 7
+    rows = [(keys[i % 3], i, float(np.round(180 + rng.normal(), 2))) for i in range(n)]
+    shuffled = [rows[i] for i in rng.permutation(n)]
+    batches = [pa.RecordBatch.from_pylist([dict(zip(_KSCHEMA.names, r)) for r in shuffled[a:b]], _KSCHEMA)
+               for a, b in ((0, 13), (13, 50), (50, 90))]
+    got = _per_key(_kernel(batches, seq_len))
+    assert sorted(got) == keys
+    for k in keys:
+        mine = [r for r in rows if r[0] == k]
+        assert [t for t, _ in got[k]] == [r[1] for r in mine[seq_len - 1:]], k
+        want = numpy_predict([r[2] for r in mine], seq_len)
+        np.testing.assert_allclose([p for _, p in got[k]], want, rtol=1e-12)
+
+
+def test_kernel_no_window_crosses_a_key_boundary():
+    # two adjacent keys, seq_len-1 rows each: 2·seq_len-2 rows in all,
+    # but no window lies inside one key
+    seq_len = 5
+    rows = [{"symbol": s, "timestamp": i, "price": 180.0 + i} for i, s in enumerate("AAAABBBB")]
+    assert _kernel([pa.RecordBatch.from_pylist(rows, _KSCHEMA)], seq_len) is None
+
+
+def test_kernel_null_key_is_one_group():
+    seq_len = 4
+    rows = [{"symbol": None if i % 2 else "A", "timestamp": i, "price": 180.0 + i * i} for i in range(12)]
+    got = _per_key(_kernel([pa.RecordBatch.from_pylist(rows, _KSCHEMA)], seq_len))
+    assert sorted(got, key=str) == ["A", None]
+    for k in ("A", None):
+        prices = [r["price"] for r in rows if r["symbol"] == k]
+        np.testing.assert_allclose([p for _, p in got[k]], numpy_predict(prices, seq_len), rtol=1e-12)
+
+
+def test_kernel_zero_batches_or_rows_emit_nothing():
+    assert _kernel([], 3) is None
+    assert _kernel([pa.RecordBatch.from_pylist([], _KSCHEMA)] * 2, 3) is None
+
+
+def test_predict_trailing_spread_over_partitions_matches_window_form(spark):
+    # repartition(3) spreads every key over partitions: the single
+    # coalesced pass must still see each key's whole history
+    df = ticks_dataframe(spark, 600, symbols=("A", "B", "C", "D")).repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    got = _keyed(predict_trailing(df, "symbol", "timestamp", "price", 60))
+    win = windows.trailing_collect(df, "symbol", "timestamp", "price", 60, tiebreak="timestamp")
+    want = _keyed(predict_over_windows(win, "window_values", seq_len=60))
+    assert got.keys() == want.keys() and len(got) == 4 * (150 - 60 + 1)
+    np.testing.assert_allclose([got[k] for k in want], list(want.values()), rtol=1e-12)
+
+
+def test_predict_trailing_empty_frame(spark):
+    df = spark.createDataFrame([], tick_schema)
+    assert predict_trailing(df, "symbol", "timestamp", "price", 60).count() == 0

@@ -155,13 +155,10 @@ def test_tiny_batch_coalesce_eliminates_window_exchange(spark):
     assert "Exchange hashpartitioning" in win2._jdf.queryExecution().executedPlan().toString()
 
 
-def test_batch_job_spreads_topk_over_cores_by_key(spark, tmp_path):
-    # TakeOrderedAndProject emits ONE partition, which would satisfy the
-    # grouped kernel's ClusteredDistribution(symbol) with no exchange at
-    # all and run the whole job as one task; run_once hash-repartitions
-    # the top-k by the key into defaultParallelism partitions BY NUMBER,
-    # so AQE keeps them, and the per-key Arrow kernel (no Window) runs
-    # one task per core.
+def test_batch_job_scores_topk_in_one_arrow_pass(spark, tmp_path):
+    # TakeOrderedAndProject emits ONE partition; run_once scores it in
+    # one MapInArrow over a free Coalesce 1 — no key exchange, no sort
+    # for a grouped kernel, and one job to materialize the predictions
     import re
 
     from stock_price_prediction_using_stream_and_batch_processing_spark import batch
@@ -172,21 +169,23 @@ def test_batch_job_spreads_topk_over_cores_by_key(spark, tmp_path):
     p = str(tmp_path / "ticks")
     ticks_dataframe(spark, 400, symbols=("A", "B", "C", "D", "E")).write.parquet(p)
     preds = batch.run_once(spark, p, k=300, seq_len=60, min_rows=100)
-    n = spark.sparkContext.defaultParallelism
     plan = preds._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert re.search(rf"Exchange hashpartitioning\(symbol#\d+, {n}\), REPARTITION_BY_NUM", plan), plan
+    for op in ("Exchange", "FlatMapGroupsInArrow", "Window", "Sort"):
+        assert op not in plan, plan
     lines = plan.splitlines()
-    pos = {
-        op: next(i for i, ln in enumerate(lines) if op in ln)
-        for op in ("FlatMapGroupsInArrow", "Exchange", "TakeOrderedAndProject")
-    }
-    assert pos["FlatMapGroupsInArrow"] < pos["Exchange"] < pos["TakeOrderedAndProject"], plan
-    assert "Window" not in plan, plan
-    # after execution AQE has not coalesced the key partitions
-    preds.collect()
-    final = preds._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in final and "AQEShuffleRead" not in final, final
+    assert sum("MapInArrow" in ln for ln in lines) == 1, plan
+    top = next(i for i, ln in enumerate(lines) if "TakeOrderedAndProject" in ln)
+    assert next(i for i, ln in enumerate(lines) if "MapInArrow" in ln) < top, plan
+    # the top-k orders by the timestamp alone, with no repeated key
+    order = re.search(r"orderBy=\[([^\]]*)\]", plan).group(1)
+    assert len(order.split(",")) == 1, plan
+    sc = spark.sparkContext
+    sc.setJobGroup("batch_preds", "materialize the predictions")
+    try:
+        preds.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("batch_preds")) == 1
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark):
