@@ -19,7 +19,16 @@ Layout:
 batch.py        the reference batch job as one declarative plan
 """
 
-from .session import get_spark, release_query_scratch
-
 __all__ = ["get_spark", "release_query_scratch"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): ``python -m <package>.worker_daemon`` imports this
+    # package first, and the daemon must import no pyspark before it
+    # prunes the worker path (see worker_daemon.py).
+    if name in __all__:
+        from . import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

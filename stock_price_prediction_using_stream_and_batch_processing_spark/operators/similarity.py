@@ -778,11 +778,14 @@ def threshold_pairs_matrix(
             f"threshold_pairs_matrix: NULL embedding at {id_col}={nulls[0]} "
             f"({len(nulls)} such row(s))"
         )
+    from ..session import track_broadcast
+
     thr = float(threshold)
     # ship the collected side through a broadcast handle so the
     # O(N·dim) matrix crosses to each executor ONCE instead of riding
     # every task's pickled closure (r17, VERDICT r16 ask #8 / guide §5)
     bc = corpus.sparkSession.sparkContext.broadcast((ids, mu))
+    track_broadcast(bc)  # destroyed by release_query_scratch
 
     def gen(batches):
         b_ids, b_mu = bc.value

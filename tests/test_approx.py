@@ -327,3 +327,18 @@ def test_kmv_refresh_split_invariance_and_replay(spark, tmp_path):
         str(r.bucket_start): r.kmin for r in spark.read.parquet(path).collect()
     }
     assert replayed == merged
+
+
+def test_refresh_hll_fine_partitioned_layout(spark, tmp_path):
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import sketches
+
+    store = str(tmp_path / "sk")
+    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    sketches.refresh_hll_fine(spark, store, ev, "ts", "user_id")
+    # physically partitioned by UTC date
+    assert any(d.startswith("part_date=") for d in os.listdir(store)), os.listdir(store)
+    # layout mismatch is an error, not silent corruption
+    with pytest.raises(ValueError, match="partitioned"):
+        sketches.refresh_hll_fine(spark, store, ev, "ts", "user_id", partition_col=None)

@@ -459,3 +459,24 @@ def test_leakage_safe_split_invariants(spark, texts):
             union = sa | sb
             j = (len(sa & sb) / len(union)) if union else 1.0
             assert j >= 0.8 - 1e-9, f"2-cluster with true jaccard {j}"
+
+
+def test_gapfill_chunked_grid_wide_span(spark):
+    """A sparse key spanning several grid chunks must produce the full
+    dense grid (no single giant sequence array; chunk boundaries must
+    not drop or duplicate buckets)."""
+    span = windows._GRID_CHUNK * 3 + 17
+    df = spark.createDataFrame(
+        [("k", 30.0, 1.0), ("k", float(span * 60 + 30), 9.0)], ["k", "sec", "v"]
+    ).select("k", F.timestamp_seconds("sec").alias("ts"), "v")
+    out = windows.gapfill_locf(df, "k", "ts", "v", bucket_seconds=60)
+    n = out.count()
+    assert n == span + 1
+    agg = out.agg(
+        F.sum(F.col("gap_filled").cast("int")).alias("gaps"),
+        F.countDistinct("bucket").alias("nb"),
+        F.min("bucket").alias("b0"),
+        F.max("bucket").alias("b1"),
+    ).collect()[0]
+    assert agg["gaps"] == span - 1 and agg["nb"] == n
+    assert agg["b1"] - agg["b0"] == span

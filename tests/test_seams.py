@@ -136,16 +136,20 @@ def test_python_datasource_empty_source(spark):
 
 def test_release_query_scratch_reclaims_blocks_and_tables(spark):
     """After a query's result is materialized, release_query_scratch
-    must leave ZERO persistent RDDs and drop tracked memory-sink tables
+    must leave ZERO persistent RDDs, drop tracked memory-sink tables and
+    destroy tracked broadcasts (threshold_pairs_matrix's collected side)
     — the guard against long-session storage-memory accretion (the r7
     sweep's late-query GC outlier)."""
+    import os
+
     from pyspark.sql import functions as F
 
     from stock_price_prediction_using_stream_and_batch_processing_spark import (
         release_query_scratch,
+        session,
     )
-    from stock_price_prediction_using_stream_and_batch_processing_spark.session import (
-        track_memory_sink_table,
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators.similarity import (
+        threshold_pairs_matrix,
     )
 
     # _MEMORY_SINK_TABLES is process-global and other tests append to
@@ -155,14 +159,22 @@ def test_release_query_scratch_reclaims_blocks_and_tables(spark):
     df = spark.range(1000).withColumn("v", F.col("id") * 2).localCheckpoint(eager=True)
     assert df.count() == 1000
     spark.range(5).createOrReplaceTempView("fake_memory_sink_r8")
-    track_memory_sink_table("fake_memory_sink_r8")
+    session.track_memory_sink_table("fake_memory_sink_r8")
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.001]), (3, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    pairs = threshold_pairs_matrix(corpus, 0.99)
+    bc = session._BROADCASTS[-1]
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2)]
     n_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert n_before >= 1
     stats = release_query_scratch(spark)
     assert stats["rdds"] >= 1
     assert stats["memory_tables"] == 1
+    assert stats["broadcasts"] == 1
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     assert not spark.catalog.tableExists("fake_memory_sink_r8")
+    assert not os.path.exists(bc._path)  # destroy() removes its pickled value
     # idempotent on an already-clean session
     stats2 = release_query_scratch(spark)
-    assert stats2 == {"rdds": 0, "memory_tables": 0}
+    assert stats2 == {"rdds": 0, "memory_tables": 0, "broadcasts": 0}

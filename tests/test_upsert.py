@@ -8,7 +8,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from stock_price_prediction_using_stream_and_batch_processing_spark.operators.upsert import merge_into_parquet
+from stock_price_prediction_using_stream_and_batch_processing_spark.operators.upsert import (
+    merge_into_parquet,
+    snapshot_diff,
+)
 from stock_price_prediction_using_stream_and_batch_processing_spark.sources import sinks
 from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import ticks_dataframe
 
@@ -63,3 +66,15 @@ def test_upsert_touches_only_update_partitions(spark, table):
     after = spark.read.parquet(table)
     assert after.count() == 72
     assert after.filter("price = 111.11").count() == 1
+
+
+def test_snapshot_diff_delimiter_and_sentinel_safe(spark):
+    """Delimiter-style encodings collide when cell values shift across
+    the boundary. Length-prefixing must catch both the shifted-boundary
+    case and the NULL-vs-lookalike case."""
+    old = spark.createDataFrame([(1, "ab", "c")], "k long, s string, t string")
+    new = spark.createDataFrame([(1, "a", "bc")], "k long, s string, t string")
+    assert [r["change_type"] for r in snapshot_diff(old, new, ["k"]).collect()] == ["changed"]
+    old2 = spark.createDataFrame([(1, None)], "k long, s string")
+    new2 = spark.createDataFrame([(1, "N")], "k long, s string")
+    assert [r["change_type"] for r in snapshot_diff(old2, new2, ["k"]).collect()] == ["changed"]
