@@ -1,12 +1,16 @@
-"""Graph analytics over derived edge tables: PageRank.
+"""Graph analytics over derived edge tables: PageRank, triangle
+counts, ancestor closure, k-core membership and label propagation.
 
-The other iterative dataflow in the engine besides connected components
-(operators/dedup.dedup_clusters). Same scale discipline: each iteration
-is ONE keyed shuffle (contributions grouped by destination) joined back
-to the node set; rank state is a narrow (node, rank) frame whose
-lineage is cut per round with localCheckpoint, so plan depth stays
-constant regardless of iteration count. Fixed iteration count (not a
-convergence loop) keeps the result deterministic and oracle-checkable.
+PageRank, ancestor closure, k-core and label propagation are the
+iterative dataflows in the engine besides connected components
+(operators/dedup.dedup_clusters), with the same scale discipline: each
+round is keyed shuffles joined back to the node set, and the per-round
+state is a narrow per-node frame whose lineage is cut with
+localCheckpoint, so plan depth stays constant regardless of iteration
+count. Fixed iteration counts (not convergence loops) keep PageRank and
+label propagation deterministic and oracle-checkable. Triangle counts
+are one pass: a degree aggregate, an orientation and one intersection
+of out-neighbour lists per edge.
 """
 
 from __future__ import annotations
@@ -70,12 +74,12 @@ def pagerank(
     # bigger than the threshold — the honest 100 TB posture) the plan
     # stays the r15 shuffle form. Checkpointed RDDs report
     # UnknownPartitioning, so the planner can never make this choice
-    # itself (same ceiling triangle_counts documents).
+    # itself.
     thresh = _parse_size_bytes(
         edges.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     )
-    # node id + double rank, plus hashed-relation overhead (the
-    # triangle_counts estimate discipline: 24 B row header + 16 B/key)
+    # node id + double rank, plus hashed-relation overhead (24 B row
+    # header + 16 B/key)
     can_broadcast = thresh > 0 and n * (8 + 8 + 40) <= thresh
     ranks = nodes.withColumn(out, F.lit(1.0 / n))
     for _ in range(n_iter):
@@ -110,180 +114,73 @@ def _parse_size_bytes(v: str) -> int:
     return int(s)
 
 
-def triangle_counts(
-    edges: DataFrame, a: str = "a", b: str = "b", broadcast_edges: bool | None = None
-) -> DataFrame:
-    """Per-node triangle counts over an undirected edge list via
-    DEGREE-ORDERED ORIENTATION — the trick that makes triangle
-    enumeration survive power-law graphs at scale. Input: one row per
-    undirected edge, canonical ``a < b``, de-duplicated (the caller
-    owns canonicalization; duplicates would overcount).
+def triangle_counts(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """Per-node triangle counts over an undirected edge list by
+    INTERSECTING DEGREE-ORIENTED OUT-NEIGHBOUR LISTS. Input: one row
+    per undirected edge, canonical ``a < b``, de-duplicated — the caller
+    owns canonicalization (``array_intersect`` returns distinct
+    elements, so duplicate edges would still inflate the x, y credits).
 
     Orient every edge from the endpoint that is LOWER in the total
-    order (degree, node id) to the higher one. Then each triangle
-    {x < y < z} (in that order) is enumerated exactly once, as the
-    wedge x→y, x→z closed by the oriented edge y→z. The payoff is the
-    wedge-join bound: out-degree under this orientation is at most
-    O(sqrt(m)) (arboricity bound), so a celebrity node with d = 10^6
-    neighbors generates O(m) wedges instead of the d^2 ≈ 10^12 a naive
-    neighbor self-join would — the difference between a skew-killed job
-    and a linear-ish one on 100 TB graphs. Shuffles: degree agg (one,
-    map-side combined), two joins keyed on the wedge pivot then the
-    closing edge pair.
+    order (degree, node id) to the higher one, and collect each node's
+    out-neighbour list N⁺(u). For each oriented edge x→y,
+    ``array_intersect(N⁺(x), N⁺(y))`` holds exactly the z closing a
+    triangle {x < y < z} (in that order), so every triangle is found
+    once, on its lowest edge x→y. Under this orientation every list has
+    O(sqrt(m)) entries (the Chiba–Nishizeki arboricity bound): a
+    celebrity node with d = 10^6 neighbours points its edges INTO
+    itself and carries a short list, never a d-long one, and no wedge
+    row is ever materialized. Building the frame runs no Spark job.
 
     Returns (node, degree, n_triangles) — only nodes with degree ≥ 1;
     n_triangles is 0 for triangle-free nodes.
     """
-    # one lazy checkpoint: the edge list feeds the degree aggregate, the
-    # orientation join AND (reused) the closing-edge join — without the
-    # cut the (often expensive) edge derivation recomputes per consumer
-    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b")).localCheckpoint(eager=False)
+    # No localCheckpoint: under AQE a checkpoint of a plan with an
+    # exchange runs its shuffle stages when it is defined, and the
+    # frame must stay lazy. The shared subplans (the edge list under
+    # the degree aggregate and the orientation join, ``deg`` under both
+    # orientation joins and the output join) meet at reused exchanges
+    # instead.
+    e = edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
     deg = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
-        # consumed 3x (both orientation joins + the final output join):
-        # one lazy checkpoint; materialized by the node-count job below
-        .localCheckpoint(eager=False)
     )
-    # With ``broadcast_edges`` the closing check is a broadcast-hash
-    # PROBE: the wedges stream through it and never shuffle — the
-    # standard triangle-count optimization whenever the edge list fits
-    # executor memory (it is wedges/edges ≈ sqrt(m) times smaller by
-    # construction). For edge lists too big to broadcast, the closing
-    # join shuffles on (y, z).
-    #
-    # Default (None) AUTO-SELECTS: Catalyst can't size the checkpointed
-    # edge list itself (a LogicalRDD defaults to defaultSizeInBytes =
-    # never-broadcast), so estimate it here — |closing| == |edges|
-    # exactly (orientation is 1:1), count + measured avg field widths
-    # come from ONE sizing job over the already-materializing
-    # checkpoint, per-row cost adds hashed-relation overhead — and hint broadcast
-    # only under the session's own autoBroadcastJoinThreshold. At 100×
-    # edges the estimate crosses the threshold and the plan flips to
-    # the shuffle join BY ITSELF (tests/test_graph.py pins both
-    # directions); explicit True/False still force either strategy.
-    if broadcast_edges is None:
-        thresh = _parse_size_bytes(
-            edges.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        )
-        if thresh <= 0:
-            broadcast_edges = False  # broadcast disabled session-wide
-        else:
-            widths = {
-                "byte": 1, "short": 2, "integer": 4, "long": 8, "float": 4,
-                "double": 8, "date": 4, "timestamp": 8, "boolean": 1,
-            }
-            # Variable-width key types (string node ids, binary) are
-            # MEASURED, not assumed: a flat per-column default would
-            # underestimate long ids and hint a broadcast over the real
-            # threshold (executor OOM at scale). avg(octet_length) rides
-            # in the SAME single sizing job as the count — the one extra
-            # job every default-path call pays — plus 16 bytes/value of
-            # UTF8String/object overhead in the hashed relation. The
-            # stats are computed over the CHECKPOINTED edge list ``e``,
-            # not over ``closing``: sizing ``closing`` directly would
-            # re-execute the degree aggregate and both orientation
-            # joins just to measure rows the checkpoint already holds.
-            # That is exact, not an approximation — orientation is a
-            # 1:1 per-row PERMUTATION of (a, b) into (y, z), so the row
-            # count matches and the summed per-row width of the two key
-            # columns is preserved (row_bytes only uses the sum).
-            def _fixed_width(dt):
-                # Decimal is fixed-width physically (ADVICE r10): a
-                # Decimal(<=18) is a compact 8-byte long, wider ones a
-                # 16-byte Decimal128 — NOT the textual octet_length the
-                # var-width fallback would measure (which overestimates
-                # and biases toward shuffle for decimal-keyed graphs).
-                from pyspark.sql.types import DecimalType
-
-                if isinstance(dt, DecimalType):
-                    return 8 if dt.precision <= 18 else 16
-                return widths.get(dt.typeName())
-
-            fixed = sum(
-                w for f in e.schema.fields if (w := _fixed_width(f.dataType)) is not None
-            )
-            var_cols = [
-                f.name for f in e.schema.fields if _fixed_width(f.dataType) is None
-            ]
-            stats = e.agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[
-                    F.avg(F.octet_length(F.col(c).cast("string"))).alias(f"_w_{i}")
-                    for i, c in enumerate(var_cols)
-                ],
-            ).first()
-            row_bytes = fixed + 24 + sum(
-                (stats[f"_w_{i}"] or 0.0) + 16 for i in range(len(var_cols))
-            )
-            broadcast_edges = stats["_n"] * row_bytes <= thresh
-    # r17 (VERDICT r16 ask #7 — the r16 degree-broadcast probe
-    # regressed because replacing the orientation joins' sort-merge
-    # EXCHANGES removed the reuse points its three consumers shared and
-    # the orientation subtree recomputed per consumer): make the
-    # sharing EXPLICIT — checkpoint the oriented edge list once — and
-    # only then broadcast the degree side. The node-count job below
-    # materializes ``deg`` (so the two broadcast builds read cache, not
-    # recompute the degree aggregate) and gates the broadcast on the
-    # session's own threshold: degree state is one (node, degree) row
-    # per node, the honest 100 TB posture falls back to the r15
-    # sort-merge shape.
-    # node ids can be variable-width (string): MEASURE the average id
-    # width in the same job that counts nodes and materializes ``deg``
-    # — the flat-default underestimate is exactly what ADVICE r10
-    # flagged on the closing-side sizing
-    dstats = deg.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.avg(F.octet_length(F.col("node").cast("string"))).alias("_w"),
-    ).first()
-    n_nodes = dstats["_n"]
-    node_w = dstats["_w"] or 0.0
-    thresh_bc = _parse_size_bytes(
-        edges.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    )
-    # per hashed-relation row: measured key bytes + 16 B key overhead +
-    # 8 B degree + 24 B row header (the closing-side estimate discipline)
-    deg_fits = thresh_bc > 0 and n_nodes * (node_w + 16 + 8 + 24) <= thresh_bc
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("da"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("db"))
-    if deg_fits:
-        da, db = F.broadcast(da), F.broadcast(db)
     ed = e.join(da, "a").join(db, "b")
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    # u → v with (deg, id)-rank(u) < rank(v); rv carried for the wedge
-    # ordering below (struct comparison is lexicographic). The lazy
-    # checkpoint is the single materialization its three consumers
-    # (both wedge sides + the closing probe) share.
+    # x → y with (deg, id)-rank(x) < rank(y), grouped into N⁺(x);
+    # exploding the lists gives back every oriented edge next to N⁺(x)
     orient = ed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.struct(F.col("db").alias("d"), F.col("b").alias("n")))
-        .otherwise(F.struct(F.col("da").alias("d"), F.col("a").alias("n")))
-        .alias("rv"),
-    ).localCheckpoint(eager=False)
-    # (no pre-count: the wedge self-join's sides and the closing probe
-    # all read this persisted RDD — block locks dedupe the first
-    # compute; an explicit materialization job measured as pure
-    # overhead, r17)
-    e1, e2 = orient.alias("e1"), orient.alias("e2")
-    wedges = e1.join(e2, (F.col("e1.u") == F.col("e2.u")) & (F.col("e1.rv") < F.col("e2.rv"))).select(
-        F.col("e1.u").alias("x"), F.col("e1.v").alias("y"), F.col("e2.v").alias("z")
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("x"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("y"),
     )
-    closing = orient.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    if broadcast_edges:
-        closing = F.broadcast(closing)
-    tri = wedges.join(closing, ["y", "z"])
-    per_node = (
-        tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_triangles"))
+    out = orient.groupBy("x").agg(F.collect_list("y").alias("nx"))
+    c = (
+        out.select("x", "nx", F.explode("nx").alias("y"))
+        .join(out.select(F.col("x").alias("y"), F.col("nx").alias("ny")), "y")
+        .select("x", "y", F.array_intersect("nx", "ny").alias("c"))
     )
-    pn = F.broadcast(per_node) if deg_fits else per_node
-    return deg.join(pn, "node", "left").select(
+    # x and y each close size(c) triangles; every z in c closes one
+    n = F.size("c")
+    credits = c.select(
+        F.inline(
+            F.concat(
+                F.array(
+                    F.struct(F.col("x").alias("node"), n.alias("n")),
+                    F.struct(F.col("y").alias("node"), n.alias("n")),
+                ),
+                F.transform("c", lambda z: F.struct(z.alias("node"), F.lit(1).alias("n"))),
+            )
+        )
+    )
+    per_node = credits.groupBy("node").agg(F.sum("n").alias("n_triangles"))
+    return deg.join(per_node, "node", "left").select(
         "node",
         "degree",
         F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),

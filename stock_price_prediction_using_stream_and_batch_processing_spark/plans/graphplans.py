@@ -305,10 +305,10 @@ def triangle_counts_parts(spark, sf_dir):
     """Per-part triangle counts + local clustering coefficient over the
     part co-purchase graph (distinct same-order part pairs — the edge
     derivation ``copurchase_lift_parts`` uses, here unthresholded:
-    ~116k edges / ~414k triangles at sf0.01). The Spark side enumerates
-    via DEGREE-ORDERED orientation (operators/graph.triangle_counts):
-    wedge fan-out is bounded by the O(sqrt(m)) oriented out-degree, so
-    a power-law hub can't explode the join the way the oracle's simpler
+    ~116k edges / ~414k triangles at sf0.01). The Spark side intersects
+    DEGREE-ORIENTED out-neighbour lists (operators/graph.triangle_counts):
+    each list is bounded by the O(sqrt(m)) oriented out-degree, so a
+    power-law hub can't explode the join the way the oracle's simpler
     id-ordered enumeration would on a skewed graph — both count each
     triangle exactly once, which is what the differential pins.
     Clustering coefficient = 2T / (d(d-1)): exact-integer product, ONE

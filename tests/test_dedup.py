@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup
+from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup, textops
 
 from .conftest import SF_MED
 
@@ -876,3 +876,55 @@ def test_incremental_content_dedup_native_fence_replay(spark, tmp_path):
     # store rows carry their nights
     got = {(r.fp is not None, r.night) for r in snap.read_snapshot(spark, store).collect()}
     assert {n for _, n in got} == {0, 1, 2}
+
+
+def test_lsh_band_keys_validates_shape(spark):
+    d = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="multiple of bands"):
+        dedup.minhash_lsh_pairs(d, "text", "doc_id", num_hashes=8, bands=16)
+    with pytest.raises(ValueError, match="multiple of bands"):
+        dedup.minhash_lsh_pairs(d, "text", "doc_id", num_hashes=16, bands=5)
+
+
+def test_winnow_admission_matches_selection(spark):
+    # k=8, window=4: docs shorter than k+window-1=11 normalized chars
+    # produce no full window and are excluded up front; an 11-char doc
+    # emits exactly one fingerprint window's min.
+    df = spark.createDataFrame(
+        [(1, "abcdefghi"), (2, "abcdefghijk")], "doc_id long, text string"
+    )
+    out = textops.winnowed_fingerprints(df, "text", "doc_id", k=8, window=4)
+    got = {r["doc_id"] for r in out.collect()}
+    assert got == {2}
+
+
+def test_content_dedup_preserves_caller_underscore_columns(spark):
+    # content_dedup / incremental_content_dedup use free_name for their
+    # helper columns, so a caller frame already carrying _fp/_rn/_keep_id
+    # keeps them (round-5 review finding).
+    from pyspark.sql import functions as F
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(1, "same text", "a"), (2, "same text", "b"), (3, "other", "c")],
+        ["doc_id", "text", "_fp"],
+    ).withColumn("_rn", F.lit("keepme"))
+    out = dedup.content_dedup(df, "text", "doc_id")
+    rows = {r.doc_id: (r._fp, r._rn) for r in out.collect()}
+    assert set(rows) == {1, 3}
+    assert rows[1] == ("a", "keepme")
+
+
+def test_incremental_content_dedup_with_fp_column(spark, tmp_path):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup
+
+    b1 = spark.createDataFrame(
+        [(1, "alpha", "x"), (2, "alpha", "y")], ["doc_id", "text", "_fp"]
+    )
+    b2 = spark.createDataFrame([(3, "alpha", "z"), (4, "beta", "w")], ["doc_id", "text", "_fp"])
+    store = str(tmp_path / "fpstore")
+    out1 = dedup.incremental_content_dedup(spark, b1, store)
+    assert {(r.doc_id, r._fp) for r in out1.collect()} == {(1, "x")}
+    out2 = dedup.incremental_content_dedup(spark, b2, store)
+    assert {(r.doc_id, r._fp) for r in out2.collect()} == {(4, "w")}

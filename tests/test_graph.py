@@ -1,12 +1,16 @@
-"""PageRank operator mechanics on constructed graphs (the corpus-level
-differential check is pagerank_customer_supplier in
-test_queries_oracle.py)."""
+"""Graph operator mechanics on constructed graphs (the corpus-level
+differential checks are the graph queries in test_queries_oracle.py)."""
 
 from __future__ import annotations
 
 import collections
+import random
+import re
+import uuid
+from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from stock_price_prediction_using_stream_and_batch_processing_spark.operators import graph
 
@@ -53,8 +57,7 @@ def test_pagerank_rejects_bad_iter(spark):
 def test_triangle_counts_planted(spark):
     """K4 on {1,2,3,4} (4 triangles; every node in 3), one pendant edge
     4-5 (node 5: degree 1, no triangles), one triangle {6,7,8} hanging
-    off nothing else. Both orientations of the operator (broadcast and
-    shuffle closing join) must agree exactly."""
+    off nothing else."""
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     extra = [(4, 5), (6, 7), (6, 8), (7, 8)]
     edges = spark.createDataFrame(k4 + extra, "a long, b long")
@@ -62,12 +65,8 @@ def test_triangle_counts_planted(spark):
         1: (3, 3), 2: (3, 3), 3: (3, 3), 4: (4, 3),
         5: (1, 0), 6: (2, 1), 7: (2, 1), 8: (2, 1),
     }
-    for bc in (True, False):
-        got = {
-            r.node: (r.degree, r.n_triangles)
-            for r in graph.triangle_counts(edges, broadcast_edges=bc).collect()
-        }
-        assert got == want, f"broadcast_edges={bc}"
+    got = {r.node: (r.degree, r.n_triangles) for r in graph.triangle_counts(edges).collect()}
+    assert got == want
 
 
 def test_triangle_counts_hub_skew(spark):
@@ -82,6 +81,114 @@ def test_triangle_counts_hub_skew(spark):
     assert out[0] == (40, 1)
     assert out[1] == (2, 1) and out[2] == (2, 1)
     assert all(out[i] == (1, 0) for i in range(3, 41))
+
+
+def _wedge_triangle_counts(edges):
+    """The wedge form ``triangle_counts`` replaced, kept as its parity
+    reference: each oriented wedge x→y, x→z (y before z in the
+    (degree, id) order) closed by the oriented edge y→z."""
+    deg = (
+        edges.select(F.col("a").alias("node"))
+        .unionByName(edges.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("degree"))
+    )
+    ed = edges.join(deg.select(F.col("node").alias("a"), F.col("degree").alias("da")), "a").join(
+        deg.select(F.col("node").alias("b"), F.col("degree").alias("db")), "b"
+    )
+    a_first = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
+    orient = ed.select(
+        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        F.when(a_first, F.struct(F.col("db").alias("d"), F.col("b").alias("n")))
+        .otherwise(F.struct(F.col("da").alias("d"), F.col("a").alias("n")))
+        .alias("rv"),
+    )
+    e1, e2 = orient.alias("e1"), orient.alias("e2")
+    wedges = e1.join(e2, (F.col("e1.u") == F.col("e2.u")) & (F.col("e1.rv") < F.col("e2.rv"))).select(
+        F.col("e1.u").alias("x"), F.col("e1.v").alias("y"), F.col("e2.v").alias("z")
+    )
+    tri = wedges.join(orient.select(F.col("u").alias("y"), F.col("v").alias("z")), ["y", "z"])
+    per_node = (
+        tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias("n_triangles"))
+    )
+    return {r.node: (r.degree, r.n_triangles or 0) for r in deg.join(per_node, "node", "left").collect()}
+
+
+def _triangles(edges):
+    return {r.node: (r.degree, r.n_triangles) for r in graph.triangle_counts(edges).collect()}
+
+
+def _random_edges(seed, n, m):
+    rng = random.Random(seed)
+    pairs = ((rng.randrange(n), rng.randrange(n)) for _ in range(m))
+    return sorted({(min(x, y), max(x, y)) for x, y in pairs if x != y})
+
+
+_PARITY_GRAPHS = {
+    "seeded_random": _random_edges(7, 120, 900),
+    "hub_star_with_rim": [(0, i) for i in range(1, 41)] + [(1, 2)],
+    "k8": [(x, y) for x in range(8) for y in range(x + 1, 8)],
+    "empty": [],
+    # both forms drop the NULL-endpoint edge from the orientation joins;
+    # its endpoints still count it in their degree
+    "null_endpoint": [(1, 2), (1, 3), (2, 3), (3, 4), (3, None)],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY_GRAPHS))
+def test_triangle_counts_match_wedge_reference(spark, name):
+    edges = spark.createDataFrame(_PARITY_GRAPHS[name], "a long, b long")
+    want = _wedge_triangle_counts(edges)
+    assert _triangles(edges) == want
+    if name == "k8":
+        assert want == {u: (7, 21) for u in range(8)}
+    if name == "null_endpoint":
+        assert want[None] == (1, 0) and want[3] == (4, 1)
+
+
+@pytest.mark.parametrize(
+    "id_type, to_id, from_id",
+    [
+        ("string", lambda x: f"n{x}", lambda s: int(s[1:])),
+        ("decimal(20,0)", lambda x: Decimal(10**19 + x), lambda d: int(d) - 10**19),
+    ],
+)
+def test_triangle_counts_wide_ids_match_long_ids(spark, id_type, to_id, from_id):
+    """The same graph keyed by string and by decimal(20,0) ids gives the
+    long-keyed answer once the ids are mapped back, and matches the
+    wedge reference on its own keys."""
+    pairs = _random_edges(11, 60, 200)
+    longs = _triangles(spark.createDataFrame(pairs, "a long, b long"))
+    rows = [tuple(sorted((to_id(x), to_id(y)))) for x, y in pairs]
+    edges = spark.createDataFrame(rows, f"a {id_type}, b {id_type}")
+    got = _triangles(edges)
+    assert got == _wedge_triangle_counts(edges)
+    assert {from_id(u): v for u, v in got.items()} == longs
+
+
+def test_triangle_counts_builds_lazily_without_wedge_join(spark):
+    """Building the frame runs no Spark job: the first job is the
+    caller's action. The plan intersects out-neighbour lists, and every
+    join in it is an equi-join: the wedge self-join, whose condition
+    carries the (degree, id) rank inequality, is gone."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(_PARITY_GRAPHS["seeded_random"], "a long, b long")
+    group = f"triangle_build_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build triangle_counts")
+    try:
+        out = graph.triangle_counts(edges)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        plan = out._jdf.queryExecution().analyzed().toString()
+        out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) > 0
+    assert "array_intersect" in plan, plan
+    conditions = re.findall(r"Join \w+, (.*)", plan)
+    assert conditions and not any("<" in c for c in conditions), plan
 
 
 def test_ancestor_closure_deep_chain_and_forest(spark):
@@ -106,132 +213,6 @@ def test_ancestor_closure_dangling_parent_persists(spark):
     df = spark.createDataFrame([(5, 99), (1, None)], "node long, parent long")
     out = {r.node: (r.root, r.depth) for r in graph.ancestor_closure(df, n_iter=3).collect()}
     assert out == {5: (99, 1), 1: (1, 0)}
-
-
-def test_triangle_auto_selects_closing_strategy_by_size(spark):
-    """broadcast_edges=None (the default) must pick the closing-join
-    strategy from the SESSION's autoBroadcastJoinThreshold: an edge
-    list whose estimated size crosses the threshold executes the
-    shuffle join by itself (no one passes a flag), an under-threshold
-    list keeps the broadcast probe, and both agree with the forced
-    paths exactly."""
-    import random
-
-    rng = random.Random(7)
-    edges = list({(min(x, y), max(x, y)) for x, y in
-                  ((rng.randrange(400), rng.randrange(400)) for _ in range(3000))
-                  if x != y})
-    df = spark.createDataFrame(edges, "a long, b long")
-    want = {r.node: (r.degree, r.n_triangles)
-            for r in graph.triangle_counts(df, broadcast_edges=True).collect()}
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # ~2.9k edges x (8+8+24)B ~ 116 KB estimate: over a 4 KB
-        # threshold -> auto must flip to the shuffle closing join
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4KB")
-        auto_small = graph.triangle_counts(df)
-        plan = auto_small._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan, plan[:2000]
-        got = {r.node: (r.degree, r.n_triangles) for r in auto_small.collect()}
-        assert got == want
-
-        # generous threshold -> auto keeps the broadcast probe
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        auto_big = graph.triangle_counts(df)
-        plan = auto_big._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan[:2000]
-        got = {r.node: (r.degree, r.n_triangles) for r in auto_big.collect()}
-        assert got == want
-
-        # threshold -1 (broadcast disabled session-wide) -> shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = graph.triangle_counts(df)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan, plan[:2000]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_triangle_auto_sizing_measures_string_id_width(spark):
-    """Variable-width node ids are sized by MEASURED avg byte length,
-    not a flat per-column default: the same 200-edge graph under the
-    same threshold must broadcast with short ids but refuse (shuffle)
-    once each id carries a ~200-byte payload — the underestimate that
-    would otherwise hint an executor-OOM broadcast at scale."""
-    import random
-
-    rng = random.Random(11)
-    pairs = list({(min(x, y), max(x, y)) for x, y in
-                  ((rng.randrange(60), rng.randrange(60)) for _ in range(200))
-                  if x != y})
-    short = spark.createDataFrame(
-        [(f"n{x}", f"n{y}") for x, y in pairs], "a string, b string"
-    )
-    long_ids = spark.createDataFrame(
-        [(f"n{x}" + "p" * 200, f"n{y}" + "p" * 200) for x, y in pairs],
-        "a string, b string",
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # ~190 edges: short ids ≈ 190·(2·(3+16)+24) ≈ 12 KB < 32 KB;
-        # long ids ≈ 190·(2·(203+16)+24) ≈ 88 KB > 32 KB.
-        # The sizing decision under test is the CLOSING join's (its
-        # build side is edge-count-scaled); r17 also broadcasts the
-        # node-count-scaled DEGREE side under its own measured-width
-        # gate, so assert on the closing join's keys (y, z), not on
-        # the presence of any broadcast at all.
-        import re
-
-        def closing_broadcast(plan: str) -> bool:
-            return bool(re.search(r"BroadcastHashJoin \[y#\d+", plan))
-
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "32KB")
-        plan = graph.triangle_counts(short)._jdf.queryExecution().executedPlan().toString()
-        assert closing_broadcast(plan), plan[:2000]
-        plan = graph.triangle_counts(long_ids)._jdf.queryExecution().executedPlan().toString()
-        assert not closing_broadcast(plan), plan[:2000]
-        # and the strategies agree on the answer
-        want = {r.node: (r.degree, r.n_triangles)
-                for r in graph.triangle_counts(short).collect()}
-        got = {r.node.rstrip("p"): (r.degree, r.n_triangles)
-               for r in graph.triangle_counts(long_ids).collect()}
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_triangle_auto_sizing_decimal_is_fixed_width(spark):
-    """Decimal node ids are sized at their PHYSICAL width (8 bytes at
-    precision <= 18, 16 above — ADVICE r10), not the textual
-    octet_length of their string cast: the same small graph must still
-    broadcast under a threshold the textual estimate (~20 digit bytes +
-    16 overhead per value) would overflow, and the decimal-keyed result
-    must match the long-keyed one."""
-    from pyspark.sql import functions as F
-
-    pairs = [(x, y) for x in range(20) for y in range(x + 1, 20) if (x + y) % 3 == 0]
-    longs = spark.createDataFrame(pairs, "a long, b long")
-    from decimal import Decimal
-
-    base = 10_000_000_000_000_000_000  # 20 digits: textual width 20+16=36/value
-    decs = spark.createDataFrame(
-        [(Decimal(base + x), Decimal(base + y)) for x, y in pairs],
-        "a decimal(20,0), b decimal(20,0)",
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # 63 edges: fixed-width Decimal128 -> 63·(2·16+24) = 3.5 KB
-        # < 4.5 KB, so the fix broadcasts; the old textual sizing gave
-        # 63·(2·36+24) = 6.0 KB > 4.5 KB and refused (shuffle) — the
-        # conservative bias ADVICE r10 flagged, now discriminated away.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4608")
-        plan = graph.triangle_counts(decs)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, plan[:2000]
-        want = {r.node: (r.degree, r.n_triangles) for r in graph.triangle_counts(longs).collect()}
-        got = {int(r.node) - base: (r.degree, r.n_triangles) for r in graph.triangle_counts(decs).collect()}
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_k_core_cascade_and_honest_cap(spark):
@@ -309,5 +290,10 @@ def test_pagerank_dangling_mass_and_tiebreak(spark):
 
 
 def test_pagerank_empty_graph_returns_empty(spark):
+    edges = spark.createDataFrame([], "src string, dst string")
+    assert graph.pagerank(edges).count() == 0
+
+
+def test_pagerank_empty_graph(spark):
     edges = spark.createDataFrame([], "src string, dst string")
     assert graph.pagerank(edges).count() == 0

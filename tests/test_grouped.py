@@ -31,3 +31,13 @@ def test_grouped_map_equals_native_regression(spark):
         assert round(g.slope, 4) == pytest.approx(n.slope, abs=2e-4)
         assert round(g.intercept, 4) == pytest.approx(n.intercept, abs=2e-4)
         assert round(g.forecast_next, 4) == pytest.approx(n.forecast_next, abs=2e-4)
+
+
+def test_grouped_forecast_tiebreak_equals_ts(spark):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.ml.grouped import per_key_linear_forecast
+
+    df = spark.createDataFrame(
+        [("s", float(i), float(i) * 2.0) for i in range(5)], "symbol string, timestamp double, price double"
+    )
+    out = per_key_linear_forecast(df, "symbol", "timestamp", "price", tiebreak="timestamp").collect()
+    assert len(out) == 1 and out[0]["slope"] == pytest.approx(2.0)

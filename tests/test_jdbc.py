@@ -174,3 +174,16 @@ def test_pushdown_subquery_dialect_edges():
         jdbc.pushdown_subquery("stock_ticks_raw", order_by="timestamp", limit=10_000)
         == "(SELECT * FROM stock_ticks_raw ORDER BY timestamp DESC LIMIT 10000) as tmp"
     )
+
+
+def test_fresh_result_dir_is_private_per_call(tmp_path):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.plans.workdirs import (
+        fresh_result_dir,
+    )
+
+    a, b = fresh_result_dir("t"), fresh_result_dir("t")
+    assert a != b
+    import os
+
+    assert not os.path.exists(a) and not os.path.exists(b)  # writer creates
+    assert os.path.isdir(os.path.dirname(a)) and os.path.isdir(os.path.dirname(b))

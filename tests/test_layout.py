@@ -228,3 +228,13 @@ def test_file_manifest_null_bounds_file_is_skipped_losslessly(spark, tmp_path):
         r["id"] for r in spark.read.parquet(*paths).where(F.col("v").between(60.0, 70.0)).collect()
     )
     assert got == list(range(60, 71))
+
+
+def test_percentile_bins_null_scores_stay_null(spark):
+    df = spark.createDataFrame(
+        [(float(i),) for i in range(100)] + [(None,)], "score double"
+    )
+    out = quality.percentile_bins(df, "score")
+    nulls = out.filter(F.col("score").isNull()).collect()
+    assert len(nulls) == 1 and nulls[0]["bin"] is None
+    assert out.filter(F.col("bin") == 1).filter(F.col("score").isNull()).count() == 0

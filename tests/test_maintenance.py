@@ -169,3 +169,24 @@ def test_incremental_join_refresh_delta_algebra(spark, tmp_path):
         [(1, "a1", "b1"), (2, "a2", "b2"), (4, "a4", "b4"), (1, "a1x", "b1")]
     )
     assert view == want  # exactly once each; k=3 unmatched, absent
+
+
+def test_expire_partitions_type_safe_and_wipe_guard(spark, tmp_path):
+    """Typed (date) partition values vs string keep_values must match by
+    their directory text — and a keep list matching NOTHING must raise,
+    not silently delete the whole table."""
+    import datetime as dt
+    import os
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources import sinks
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(dt.date(2024, 1, 1), 1), (dt.date(2024, 1, 2), 2)], "d date, v int"
+    )
+    df.write.partitionBy("d").parquet(path)
+    dropped = sinks.expire_partitions(spark, path, "d", ["2024-01-02"])
+    assert [str(v) for v in dropped] == ["2024-01-01"]
+    assert os.path.isdir(os.path.join(path, "d=2024-01-02"))
+    with pytest.raises(ValueError, match="ALL"):
+        sinks.expire_partitions(spark, path, "d", ["1999-01-01"])

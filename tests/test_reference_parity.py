@@ -20,7 +20,7 @@ from stock_price_prediction_using_stream_and_batch_processing_spark.functions.sc
 )
 from stock_price_prediction_using_stream_and_batch_processing_spark.ml.inference import predict_over_windows
 from stock_price_prediction_using_stream_and_batch_processing_spark.ml.predictor import LinearWindowModel
-from stock_price_prediction_using_stream_and_batch_processing_spark.operators import windows
+from stock_price_prediction_using_stream_and_batch_processing_spark.operators import joins, windows
 from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import generate_ticks, ticks_dataframe
 
 MN, MX = REFERENCE_SCALER_MIN, REFERENCE_SCALER_MAX
@@ -160,3 +160,25 @@ def test_asof_join_tie_semantics(spark):
     assert out[ts(5)] is None      # nothing at or before t=5
     assert out[ts(10)] == 1.0      # exact-timestamp match included
     assert out[ts(20)] == 2.0      # latest right row not after t=20
+
+
+def test_asof_join_attaches_whole_row_atomically(spark):
+    """A NULL field in the newest right row must NOT fall back to an
+    older row's value (that would synthesize a composite row that never
+    existed)."""
+    left = spark.createDataFrame([("k", 30, 0)], "key string, ts long, seq long")
+    right = spark.createDataFrame(
+        [("k", 10, 10.0, 11.0), ("k", 20, None, 5.0)],
+        "key string, ts long, bid double, ask double",
+    )
+    out = joins.asof_join(left, right, "key", "ts", ["bid", "ask"]).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r["bid"] is None and r["ask"] == 5.0  # the t=20 ROW, as-is
+
+
+def test_asof_join_reserved_column_guard(spark):
+    left = spark.createDataFrame([("k", 1, True)], "key string, ts long, _is_left boolean")
+    right = spark.createDataFrame([("k", 1, 1.0)], "key string, ts long, v double")
+    with pytest.raises(ValueError, match="_is_left"):
+        joins.asof_join(left, right, "key", "ts", ["v"])

@@ -952,3 +952,17 @@ def test_incremental_semantic_dedup_bootstrap_race_refuses(spark, tmp_path, monk
         similarity.incremental_semantic_dedup(spark, batch, store, threshold=0.95, dim=DIM, n_cells=2)
     assert snap.current_version(cent_tbl) == 2
     assert snap.current_version(os.path.join(store, "vectors")) == 0
+
+
+def test_similarity_separate_id_space(spark):
+    # query id 7 must still score corpus id 7 when exclude_self=False
+    import random
+
+    random.seed(3)
+    rows = [(i, [random.gauss(0, 1) for _ in range(8)]) for i in range(20)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = spark.createDataFrame([(7, rows[3][1])], "q_id long, embedding array<float>")
+    with_self = similarity.brute_force_topk(corpus, q, k=20, exclude_self=False)
+    assert {r["vec_id"] for r in with_self.collect()} == set(range(20))
+    without = similarity.brute_force_topk(corpus, q, k=20)  # default True
+    assert 7 not in {r["vec_id"] for r in without.collect()}

@@ -100,3 +100,11 @@ def test_aqe_skew_split_fires_on_planted_hot_key(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_salted_join_rejects_small_side_preserving_how(spark):
+    big = spark.createDataFrame([(1, "k", 1.0)], "id long, k string, v double")
+    small = spark.createDataFrame([("k", "dim")], "k string, d string")
+    with pytest.raises(ValueError, match="duplicate unmatched"):
+        skew.salted_join_big_hot(big, small, "k", "id", n_salts=4, how="full")
+    assert skew.salted_join_big_hot(big, small, "k", "id", n_salts=4, how="left").count() == 1

@@ -797,3 +797,35 @@ def test_driver_fast_read_differential_and_fallback(spark, tmp_path):
 
     # anomaly handling: nonexistent checkpoint -> None (never raises)
     assert _driver_read_tick_batch(str(tmp_path / "nope"), 0, "UTC") is None
+
+
+def test_tick_stream_rejects_async_with_available_now(spark, tmp_path):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.streaming.pipeline import run_tick_stream
+
+    with pytest.raises(ValueError, match="processing-time"):
+        run_tick_stream(
+            spark, spark.range(1).selectExpr("CAST(null AS binary) AS value"),
+            str(tmp_path / "s"), str(tmp_path / "c"), async_progress=True,
+        )
+
+
+def test_ticks_wire_format_timezone_robust(spark):
+    """The JSON wire timestamps carry an explicit UTC offset, so they
+    parse identically under ANY session timezone (a naive string would
+    land hours away from ticks_dataframe under a non-UTC driver)."""
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources.ticks import ticks_dataframe, ticks_json_lines
+    from stock_price_prediction_using_stream_and_batch_processing_spark.streaming.pipeline import parse_ticks
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        lines = ticks_json_lines(5)
+        raw = spark.createDataFrame([(l.encode(),) for l in lines], "value binary")
+        parsed = parse_ticks(raw).select("symbol", "timestamp", "price").collect()
+        expected = {
+            (r["symbol"], r["timestamp"], r["price"])
+            for r in ticks_dataframe(spark, 5).select("symbol", "timestamp", "price").collect()
+        }
+        assert {(r["symbol"], r["timestamp"], r["price"]) for r in parsed} == expected
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

@@ -78,3 +78,13 @@ def test_snapshot_diff_delimiter_and_sentinel_safe(spark):
     old2 = spark.createDataFrame([(1, None)], "k long, s string")
     new2 = spark.createDataFrame([(1, "N")], "k long, s string")
     assert [r["change_type"] for r in snapshot_diff(old2, new2, ["k"]).collect()] == ["changed"]
+
+
+def test_snapshot_diff_complex_types(spark):
+    # array whose display-string rendering collides must still diff
+    old = spark.createDataFrame([(1, ["a, b"])], "k long, a array<string>")
+    new = spark.createDataFrame([(1, ["a", " b"])], "k long, a array<string>")
+    assert [r["change_type"] for r in snapshot_diff(old, new, ["k"]).collect()] == ["changed"]
+    m_old = spark.createDataFrame([(1, {"x": 1})], "k long, m map<string,int>")
+    with pytest.raises(ValueError, match="map"):
+        snapshot_diff(m_old, m_old, ["k"])
