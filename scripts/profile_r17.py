@@ -88,7 +88,6 @@ def main() -> None:
         ]),
         (similarity, [
             "ivf_build", "semantic_dedup", "brute_force_topk",
-            "threshold_pairs_matrix",
         ]),
         (graph, ["pagerank", "triangle_counts", "k_core", "label_propagation"]),
         (catalog, ["catalog_publish"]),

@@ -369,6 +369,40 @@ def _unit_rows(ids, vals: list, id_col: str, where: str = "") -> tuple[np.ndarra
     return keep, m / norms[:, None]
 
 
+def _components(ids, vals: list, threshold: float, id_col: str, where: str = ""):
+    """Exact cosine components of one group of rows, on the driver or
+    inside a grouped task: one ``U @ Uᵀ`` BLAS matmul over the unit rows
+    (``_unit_rows``' refusals, ``where`` naming the group), its upper
+    triangle thresholded at cosine >= ``threshold``, then union-find
+    over those pairs. A NULL embedding forms no pair, so its row is its
+    own component.
+
+    Returns ``(labels, i, j)``: each row's min-id label (its
+    component's smallest id) and the row positions ``i < j`` of every
+    pair. Union-find nodes are id VALUES, so a duplicated id is one
+    node.
+
+    NUMERIC EQUIVALENCE to the higher-order-fold pair form (the
+    sequential ``aggregate`` dot over ``vectors.unit`` columns): BLAS
+    pairwise summation and the fold differ by O(dim · ulp) ≈ 1e-14
+    relative, so a pair flips between the two forms only if its
+    |cosine − threshold| lies inside that band. The registered
+    fixtures' measured margins are ~1e-5, nine orders above it, so the
+    pair set is the fold form's (parity and margin pinned in
+    tests/test_similarity.py)."""
+    keep, u = _unit_rows(ids, vals, id_col, where)
+    # one node per distinct id, numbered in id order: a component's
+    # root (its smallest node) is its min id
+    node, uniq = pd.factorize(ids, sort=True)
+    root = np.arange(len(uniq))
+    i = j = np.zeros(0, dtype=np.intp)
+    if len(keep) >= 2:
+        r, c = np.nonzero(np.triu(u @ u.T >= float(threshold), 1))
+        i, j = keep[r], keep[c]
+        root = _union_min(root, node[i], node[j])
+    return np.asarray(uniq)[root[node]], i, j
+
+
 def _cell_components(
     cell: DataFrame,
     threshold: float,
@@ -379,21 +413,20 @@ def _cell_components(
     """``(id_col, sem_cluster_id)`` for every row of ``cell``: the min id
     reachable through cosine >= ``threshold`` pairs WITHIN the row's
     ``cell_col`` value. ONE grouped pass (applyInPandas per cell): the
-    input shuffles once by cell; each cell's pairs come from a single
-    ``U @ Uᵀ`` BLAS matmul over unit rows (upper triangle), and a
-    union-find over those pairs labels every row of the cell. No pair
-    frame, no component rounds, no join back to the corpus. This is the
-    engine's one way from embedding similarity to components: callers
-    that need exact all-pairs components pass one constant cell.
+    input shuffles once by cell, and each cell runs ``_components``
+    (one ``U @ Uᵀ`` BLAS matmul over unit rows, union-find over the
+    pairs) and keeps only its labels. No pair frame, no component
+    rounds, no join back to the corpus. This is the engine's one way
+    from embedding similarity to components; a caller that needs exact
+    all-pairs components over a collected sample calls ``_components``
+    once on the driver.
 
     Per-cell memory is O(cell_size × dim + cell_size²) — exactly the
     quadratic term SemDeDup's cell policy already bounds
     (``target_cell_size`` / ``max_cell_pairs_side``; see
     ``semantic_dedup``). NUMERIC EQUIVALENCE to the higher-order-fold
-    pair form is the ``threshold_pairs_matrix`` argument: summation-
-    order differences are O(dim·ulp) ≈ 1e-14 relative, the registered
-    fixtures' measured |cosine − threshold| margins are ~1e-5 — pinned
-    with a component parity test in tests/test_similarity.py.
+    pair form is ``_components``' margin argument — pinned with a
+    component parity test in tests/test_similarity.py.
 
     Union-find nodes are id VALUES: a duplicated id inside a cell is one
     node. Ids must be unique across the corpus — a duplicate split
@@ -409,23 +442,14 @@ def _cell_components(
 
     id_field = cell.schema[id_col]
     schema = StructType([id_field, StructField("sem_cluster_id", id_field.dataType)])
-    thr = float(threshold)
 
     def components_of_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col]
         key = pdf[cell_col].iloc[0]
-        keep, u = _unit_rows(
-            ids, pdf[vec_col].tolist(), id_col, f" in cell {'NULL' if pd.isna(key) else key}"
+        labels, _, _ = _components(
+            ids, pdf[vec_col].tolist(), threshold, id_col, f" in cell {'NULL' if pd.isna(key) else key}"
         )
-        # one node per distinct id, numbered in id order: a component's
-        # root (its smallest node) is its min id
-        node, uniq = pd.factorize(ids, sort=True)
-        root = np.arange(len(uniq))
-        if len(keep) >= 2:
-            r, c = np.nonzero(np.triu(u @ u.T >= thr, 1))
-            kept_node = node[keep]
-            root = _union_min(root, kept_node[r], kept_node[c])
-        return pd.DataFrame({id_col: ids, "sem_cluster_id": np.asarray(uniq)[root[node]]})
+        return pd.DataFrame({id_col: ids, "sem_cluster_id": labels})
 
     return (
         cell.select(id_col, vec_col, cell_col)
@@ -726,84 +750,6 @@ def incremental_semantic_dedup(
         batch_id=batch_id,
     )
     return admitted.select(*in_cols)
-
-
-def threshold_pairs_matrix(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """EXACT cosine-threshold pair enumeration — all ``(id_a, id_b)``
-    with ``id_a < id_b`` and cosine(a, b) >= threshold — via blocked
-    BLAS instead of a BroadcastNestedLoopJoin evaluating an interpreted
-    higher-order dot fold per pair (guide §4.2: hand whole batches to
-    vectorized native code). One side is collected once and rides the
-    closure to executors; each Arrow batch of the streaming side is one
-    ``A_unit @ M_unitᵀ`` matmul plus a mask — O(batch × N × dim) float
-    ops with zero per-pair JVM expression evaluation. Measured at sf0.1
-    (1000 × 64f, 500k pairs): 6.5 s (HOF filter) → sub-second.
-
-    SCALE CONTRACT (deliberate, same posture as ``brute_force_topk``'s
-    broadcast queries): this is the exact ALL-PAIRS certification
-    primitive — O(N·dim) driver/executor memory for the collected side
-    and O(N²·dim) compute are inherent to what it computes. Its
-    consumers are the sampled verification faces; the corpus-scale
-    paths remain LSH / IVF / SemDeDup cells.
-
-    NUMERIC EQUIVALENCE: BLAS pairwise summation and the sequential
-    ``aggregate`` fold differ by O(dim · ulp) ≈ 1e-14 relative — a pair
-    flips between the two forms only if its |cosine − threshold| is
-    inside that band. The registered faces' fixtures carry margins of
-    ~1e-5 (measured, asserted in tests/test_similarity.py), nine orders
-    above the band, so the emitted PAIR SET is provably identical to
-    the higher-order-function form (parity-pinned).
-
-    A NULL id, wrong-length or ZERO-NORM embeddings raise on the driver,
-    before the broadcast, naming the offending input (``_unit_rows``,
-    shared with the per-cell kernel). A NULL embedding raises too: the
-    certification faces feed curated fixtures, and silently dropping
-    its pairs would weaken the certificate."""
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    rows = corpus.select(id_col, vec_col).collect()
-    if not rows:
-        return corpus.sparkSession.createDataFrame(
-            [], f"id_a {id_type}, id_b {id_type}"
-        )
-    ids = np.asarray([r[0] for r in rows])
-    keep, mu = _unit_rows(ids, [r[1] for r in rows], id_col)
-    if len(keep) < len(rows):
-        nulls = [r[0] for r in rows if r[1] is None]
-        raise ValueError(
-            f"threshold_pairs_matrix: NULL embedding at {id_col}={nulls[0]} "
-            f"({len(nulls)} such row(s))"
-        )
-    from ..session import track_broadcast
-
-    thr = float(threshold)
-    # ship the collected side through a broadcast handle so the
-    # O(N·dim) matrix crosses to each executor ONCE instead of riding
-    # every task's pickled closure (r17, VERDICT r16 ask #8 / guide §5)
-    bc = corpus.sparkSession.sparkContext.broadcast((ids, mu))
-    track_broadcast(bc)  # destroyed by release_query_scratch
-
-    def gen(batches):
-        b_ids, b_mu = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id_a": [], "id_b": []})
-                continue
-            a = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            an = a / np.linalg.norm(a, axis=1)[:, None]
-            s = an @ b_mu.T
-            ia = pdf[id_col].to_numpy()
-            mask = (s >= thr) & (ia[:, None] < b_ids[None, :])
-            r, c = np.nonzero(mask)
-            yield pd.DataFrame({"id_a": ia[r], "id_b": b_ids[c]})
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        gen, f"id_a {id_type}, id_b {id_type}"
-    )
 
 
 def embedding_near_dup_pairs(

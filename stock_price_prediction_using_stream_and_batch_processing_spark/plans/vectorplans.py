@@ -199,73 +199,52 @@ def semantic_dedup_embeddings(spark, sf_dir):
       sf{{0.001,0.01,0.1}} was 0.33-0.53, a >2x margin against fixture
       regeneration.
 
+    The exact side is ONE ``similarity._components`` pass over the
+    collected sample: its labels are the exact components and its pairs
+    the true pairs the recall reads. A NULL embedding forms no pair and
+    is its own cluster, as in the per-cell kernel and the oracle.
+
     At 100 TB the clustered path is the point: the quadratic term is
     per-cell (corpus bucketed by cell, n_cells grown ~sqrt(N) per the
     SemDeDup recipe), components resolve inside the per-cell kernel,
     and this verification face — which reads all pairs to have
     something exact to certify against — runs on a fixed sample."""
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
-    # r16: exact pair enumeration via the blocked-BLAS primitive — the
-    # same pair SET as the broadcast-NL + higher-order-dot filter it
-    # replaces (margin vs rounding band proven on the operator; parity
-    # pinned in tests/test_similarity.py), at ~1/10 the cost (6.5 s ->
-    # sub-second at sf0.1, guide §4.2)
-    true_pairs = (
-        similarity.threshold_pairs_matrix(e, 0.4, id_col="vec_id", vec_col="embedding")
-        .select(F.col("id_a"), F.col("id_b"))
-    )
-    # exact side: the clustered path's kernel over the whole sample as
-    # ONE cell — every pair is compared, so its components are the
-    # exact ones (one matmul, no component rounds, no join back)
-    exact = (
-        similarity._cell_components(
-            e.withColumn("_cell", F.lit(0)), 0.4, "vec_id", "embedding"
-        )
-        .withColumnRenamed("sem_cluster_id", "cluster_id")
-        .withColumn("keep", F.col("vec_id") == F.col("cluster_id"))
-    )
-    sem = (
-        # kmeans_max_iter=8: the quantizer only gates which pairs the
-        # CLUSTERED path compares; this face's value columns are the
-        # EXACT side + invariant bits, and the recall_ok bound holds
-        # with margin at 8 iterations (measured 0.35/0.52/0.35 at
-        # sf0.001/0.01/0.1, bound 0.15). Fit 2.6 s -> 0.9 s at sf0.1.
-        similarity.semantic_dedup(e, threshold=0.4, dim=_DIM, n_cells=16, kmeans_max_iter=8)
-        .select(
-            F.col("vec_id").alias("_sid"),
-            F.col("sem_cluster_id"),
-            F.col("keep").alias("_sem_keep"),
-        )
-        # consumed twice (recall scalar, final row join) and expensive
-        # to rebuild (k-means fit): materialize the corpus-row-count
-        # frame once
-        .localCheckpoint(eager=True)
-    )
+    rows = e.select("vec_id", "embedding").collect()
+    ids = np.asarray([r[0] for r in rows])
+    cluster_id, i, j = similarity._components(ids, [r[1] for r in rows], 0.4, "vec_id")
+    # kmeans_max_iter=8: the quantizer only gates which pairs the
+    # CLUSTERED path compares; this face's value columns are the EXACT
+    # side + invariant bits, and the recall_ok bound holds with margin
+    # at 8 iterations (measured 0.35/0.52/0.35 at sf0.001/0.01/0.1,
+    # bound 0.15). Fit 2.6 s -> 0.9 s at sf0.1.
+    sem = {
+        r.vec_id: r
+        for r in similarity.semantic_dedup(
+            e, threshold=0.4, dim=_DIM, n_cells=16, kmeans_max_iter=8
+        ).collect()
+    }
+    sem_cluster = np.asarray([sem[v].sem_cluster_id for v in ids.tolist()])
+    sem_keep = np.asarray([sem[v].keep for v in ids.tolist()], dtype=bool)
     # component-level pair recall: a true pair is recovered iff the
     # clustered path connected its ends (sem pairs are a subset of true
-    # pairs, so shared sem_cluster <=> recovered)
-    sc = sem.select(F.col("_sid"), F.col("sem_cluster_id"))
-    rec = (
-        true_pairs.join(
-            sc.select(F.col("_sid").alias("id_a"), F.col("sem_cluster_id").alias("_ca")), "id_a"
-        )
-        .join(sc.select(F.col("_sid").alias("id_b"), F.col("sem_cluster_id").alias("_cb")), "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum((F.col("_ca") == F.col("_cb")).cast("long")).alias("_hit"),
-        )
-        .head()
-    )
-    # a fixture with zero true pairs certifies nothing — vacuous pass
-    recall_ok = (rec[0] == 0) or (rec[1] / rec[0] >= 0.15)
-    return exact.join(sem, F.col("vec_id") == F.col("_sid")).select(
-        "vec_id",
-        "cluster_id",
-        "keep",
-        # per-row: exactly-kept => clustered-kept (no extra job — the
-        # bit rides the output rows and the oracle pins it TRUE)
-        (~F.col("keep") | F.col("_sem_keep")).alias("sem_keep_superset"),
-        F.lit(bool(recall_ok)).alias("recall_ok"),
+    # pairs, so shared sem_cluster <=> recovered); a fixture with zero
+    # true pairs certifies nothing — vacuous pass
+    hit = int((sem_cluster[i] == sem_cluster[j]).sum())
+    recall_ok = len(i) == 0 or hit / len(i) >= 0.15
+    keep = ids == cluster_id
+    id_type = e.schema["vec_id"].dataType.simpleString()
+    return spark.createDataFrame(
+        list(zip(
+            ids.tolist(),
+            cluster_id.tolist(),
+            keep.tolist(),
+            # per-row: exactly-kept => clustered-kept
+            (~keep | sem_keep).tolist(),
+            [bool(recall_ok)] * len(ids),
+        )),
+        f"vec_id {id_type}, cluster_id {id_type}, keep boolean, "
+        "sem_keep_superset boolean, recall_ok boolean",
     )
 
 

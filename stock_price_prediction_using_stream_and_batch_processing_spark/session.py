@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark import Broadcast
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
@@ -84,23 +83,12 @@ def track_memory_sink_table(name: str) -> None:
     _MEMORY_SINK_TABLES.append(name)
 
 
-# Broadcast variables a query's plan reads from its Python tasks (e.g.
-# threshold_pairs_matrix's collected side). The returned lazy
-# DataFrame needs them until it is materialized, so the query cannot
-# destroy them itself; release_query_scratch does.
-_BROADCASTS: list[Broadcast] = []
-
-
-def track_broadcast(bc: Broadcast) -> None:
-    _BROADCASTS.append(bc)
-
-
 def release_query_scratch(spark: SparkSession) -> dict[str, int]:
     """Release JVM state a COMPLETED query left behind: every cached
     RDD block (this package takes no ``.cache()``/``.persist()``
     anywhere — all persistent RDDs are ``localCheckpoint`` blocks whose
-    DataFrames have already been materialized), every tracked
-    memory-sink temp view and every tracked broadcast variable.
+    DataFrames have already been materialized) and every tracked
+    memory-sink temp view. Returns how many of each it released.
 
     Why this is a harness hook and not in-query cleanup: a registered
     query RETURNS a lazy DataFrame whose plan scans its checkpointed
@@ -126,10 +114,4 @@ def release_query_scratch(spark: SparkSession) -> dict[str, int]:
     while _MEMORY_SINK_TABLES:
         if spark.catalog.dropTempView(_MEMORY_SINK_TABLES.pop()):
             n_tables += 1
-    n_broadcasts = 0
-    while _BROADCASTS:
-        bc = _BROADCASTS.pop()
-        if bc._sc is spark.sparkContext:  # one of a stopped context died with it
-            bc.destroy()
-            n_broadcasts += 1
-    return {"rdds": n_rdds, "memory_tables": n_tables, "broadcasts": n_broadcasts}
+    return {"rdds": n_rdds, "memory_tables": n_tables}

@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -155,10 +156,25 @@ def fixture_preflight(df: DataFrame, sf_dir: str, name: str) -> None:
     _PREFLIGHTED.add((sf_dir, name))
 
 
+# Each table's schema as inferred at its first read, per (sf_dir,
+# table) per process like ``_PREFLIGHTED``: inferring it runs a parquet
+# footer job on every read, so later reads pass it to ``.schema(...)``
+# and run none (the ``tick_schema`` read of ``batch.run_once``). A
+# table regenerated under the same path with another schema needs a
+# fresh process.
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
+
 def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table as stored (ns-timestamp cols still long)."""
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _SCHEMAS.get((sf_dir, name))
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[(sf_dir, name)] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     fixture_preflight(df, sf_dir, name)
     return df
 

@@ -7,6 +7,7 @@ families and nothing spurious at high thresholds.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from stock_price_prediction_using_stream_and_batch_processing_spark.operators import dedup, textops
 
@@ -928,3 +929,103 @@ def test_incremental_content_dedup_with_fp_column(spark, tmp_path):
     assert {(r.doc_id, r._fp) for r in out1.collect()} == {(1, "x")}
     out2 = dedup.incremental_content_dedup(spark, b2, store)
     assert {(r.doc_id, r._fp) for r in out2.collect()} == {(4, "w")}
+
+
+# --- edit_distance_pairs, bigram_surprisal, bm25_batch_retrieval ---
+
+
+def test_edit_distance_pairs_verifies_candidates(spark):
+    base = "the quick brown fox jumps over the lazy dog " * 4
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace("quick", "quack", 1)),  # 1 char edit
+            (3, "completely different text about spark catalyst " * 4),
+        ],
+        ["doc_id", "text"],
+    )
+    cands = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], ["id_a", "id_b"])
+    out = dedup.edit_distance_pairs(docs, "text", "doc_id", max_dist=10, candidates=cands)
+    rows = {(r["id_a"], r["id_b"]): r["edit_dist"] for r in out.collect()}
+    assert rows == {(1, 2): 1}
+
+
+def test_edit_distance_pairs_length_gate_excludes(spark):
+    docs = spark.createDataFrame(
+        [(1, "short text"), (2, "short text plus a very long tail " * 10)],
+        ["doc_id", "text"],
+    )
+    cands = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    out = dedup.edit_distance_pairs(docs, "text", "doc_id", max_dist=5, candidates=cands)
+    assert out.count() == 0
+
+
+def test_edit_distance_pairs_lsh_end_to_end(spark):
+    # LSH-generated candidates: near-identical docs pair up, the
+    # unrelated doc does not survive verification even if banded.
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
+    docs = spark.createDataFrame(
+        [(1, a), (2, a.replace("zeta", "zetas", 1)), (3, "unrelated corpus entirely " * 6)],
+        ["doc_id", "text"],
+    )
+    out = dedup.edit_distance_pairs(docs, "text", "doc_id", max_dist=10)
+    rows = [(r["id_a"], r["id_b"]) for r in out.collect()]
+    assert rows == [(1, 2)]
+
+
+def test_bigram_surprisal_hand_computed(spark):
+    import math
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import textops as T
+
+    # corpus: doc1 "a b a b", doc2 "a b"  (token stream N=6)
+    # bigrams: d1: (a,b),(b,a),(a,b); d2: (a,b)  => c2(a,b)=3? no: per
+    # doc: d1 has (a,b),(b,a),(a,b); d2 has (a,b) -> c2(a,b)=3, c2(b,a)=1
+    # ctx: c(a.)=3, c(b.)=1 ; uni: c(a)=3, c(b)=3, N=6
+    df = spark.createDataFrame([(1, "a b a b"), (2, "a b")], ["doc_id", "text"])
+    out = {r["doc_id"]: r["bigram_surprisal_nats"] for r in T.bigram_surprisal(df).collect()}
+    lam = 0.8
+    p_ab = lam * 3 / 3 + (1 - lam) * 3 / 6
+    p_ba = lam * 1 / 1 + (1 - lam) * 3 / 6
+    d1 = -(math.log(p_ab) + math.log(p_ba) + math.log(p_ab)) / 3
+    d2 = -math.log(p_ab)
+    assert out[1] == pytest.approx(round(d1, 6), abs=2e-6)
+    assert out[2] == pytest.approx(round(d2, 6), abs=2e-6)
+
+
+def test_bigram_surprisal_short_docs_absent(spark):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import textops as T
+
+    df = spark.createDataFrame([(1, "solo"), (2, "two tokens here")], ["doc_id", "text"])
+    out = T.bigram_surprisal(df).collect()
+    assert {r["doc_id"] for r in out} == {2}  # <2 tokens: no bigram rows
+
+
+def test_bm25_batch_retrieval_self_top_and_df_cut(spark):
+    """On a corpus with distinctive rare terms: (1) every query ranks
+    itself #1, (2) the stop-posting cut (max_df_ratio) drops the
+    ubiquitous token so a common-token-only query returns nothing."""
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators.textops import bm25_batch_retrieval
+
+    rows = [
+        (1, "apple banana common common shared"),
+        (2, "cherry date common common shared"),
+        (3, "elder fig common common shared"),
+        (4, "grape husk common common shared"),
+        (5, "iris jade common common shared"),
+        (6, "common common common shared shared"),
+    ]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    queries = corpus.where("doc_id in (1, 3)").select(
+        F.col("doc_id").alias("qid"), "text"
+    )
+    got = bm25_batch_retrieval(corpus, queries, k=2, max_df_ratio=0.5)
+    out = {(r.qid, r.rank): r.doc_id for r in got.collect()}
+    # rare terms survive the cut and are unique -> each query matches
+    # only itself ('common'/'shared' appear in ALL 6 docs, df=1.0 > 0.5)
+    assert out == {(1, 1): 1, (3, 1): 3}
+    # a query with ONLY ubiquitous terms returns nothing under the cut
+    q6 = corpus.where("doc_id = 6").select(F.col("doc_id").alias("qid"), "text")
+    assert bm25_batch_retrieval(corpus, q6, k=2, max_df_ratio=0.5).count() == 0
+    # ...and matches everything without it (k bounds the result)
+    assert bm25_batch_retrieval(corpus, q6, k=2, max_df_ratio=1.0).count() == 2

@@ -238,3 +238,27 @@ def test_percentile_bins_null_scores_stay_null(spark):
     nulls = out.filter(F.col("score").isNull()).collect()
     assert len(nulls) == 1 and nulls[0]["bin"] is None
     assert out.filter(F.col("bin") == 1).filter(F.col("score").isNull()).count() == 0
+
+
+# --- zscore_outliers ---
+
+
+def test_zscore_outliers_flags_planted(spark):
+    rows = [("a", float(v)) for v in [10, 11, 9, 10, 11, 9, 10, 11, 9, 100]]
+    df = spark.createDataFrame(rows, ["k", "v"])
+    out = quality.zscore_outliers(df, "k", "v", z_thresh=2.0)
+    got = out.collect()
+    assert len(got) == 1 and got[0]["v"] == 100.0
+    # z matches a direct computation
+    vals = [r[1] for r in rows]
+    m = sum(vals) / len(vals)
+    sd = math.sqrt(sum((x - m) ** 2 for x in vals) / (len(vals) - 1))
+    assert got[0]["zscore"] == pytest.approx((100 - m) / sd)
+
+
+def test_zscore_outliers_degenerate_groups_silent(spark):
+    df = spark.createDataFrame(
+        [("const", 5.0), ("const", 5.0), ("const", 5.0), ("single", 42.0)],
+        ["k", "v"],
+    )
+    assert quality.zscore_outliers(df, "k", "v").count() == 0

@@ -480,3 +480,54 @@ def test_gapfill_chunked_grid_wide_span(spark):
     ).collect()[0]
     assert agg["gaps"] == span - 1 and agg["nb"] == n
     assert agg["b1"] - agg["b0"] == span
+
+
+# --- gapfill_locf and rolling_corr on hand-computed inputs ---
+
+
+def test_gapfill_locf_fills_and_flags(spark):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import windows as W
+
+    # key "a": observations in buckets 0 and 3 (60s buckets); buckets
+    # 1-2 must be synthesized, carrying bucket 0's mean.
+    df = spark.createDataFrame(
+        [("a", 10.0, 2.0), ("a", 20.0, 4.0), ("a", 190.0, 9.0), ("b", 70.0, 1.0)],
+        ["k", "sec", "v"],
+    ).select("k", F.timestamp_seconds("sec").alias("ts"), "v")
+    out = W.gapfill_locf(df, "k", "ts", "v", bucket_seconds=60)
+    rows = {(r["k"], r["bucket"]): (r["value_filled"], r["gap_filled"]) for r in out.collect()}
+    assert rows == {
+        ("a", 0): (3.0, False),
+        ("a", 1): (3.0, True),
+        ("a", 2): (3.0, True),
+        ("a", 3): (9.0, False),
+        ("b", 1): (1.0, False),
+    }
+
+
+def test_rolling_corr_matches_statistics(spark):
+    import statistics
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import windows as W
+
+    xs = [1.0, 3.0, 2.0, 7.0, 5.0, 4.0]
+    ys = [2.0, 5.0, 4.0, 9.0, 9.0, 7.0]
+    df = spark.createDataFrame(
+        [("k", i, xs[i], ys[i]) for i in range(6)], ["k", "t", "x", "y"]
+    )
+    out = W.rolling_corr(df, "k", "t", "x", "y", n=3)
+    got = {r["t"]: r["rolling_corr"] for r in out.collect()}
+    assert got[0] is None  # single-row frame
+    for t in range(2, 6):
+        exp = statistics.correlation(xs[t - 2 : t + 1], ys[t - 2 : t + 1])
+        assert got[t] == pytest.approx(exp, abs=1e-12), t
+
+
+def test_rolling_corr_degenerate_null_not_error(spark):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators import windows as W
+
+    # constant x: zero variance in every frame -> NULL everywhere, and
+    # under ANSI mode the job must not raise DIVIDE_BY_ZERO.
+    df = spark.createDataFrame([("k", i, 5.0, float(i)) for i in range(4)], ["k", "t", "x", "y"])
+    out = W.rolling_corr(df, "k", "t", "x", "y", n=3).collect()
+    assert all(r["rolling_corr"] is None for r in out)

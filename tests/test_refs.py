@@ -204,3 +204,58 @@ def test_publish_enforces_constraints_added_after_branch(spark, tmp_path):
     refs.branch_create(d, "ok")
     refs.branch_append(spark, d, "ok", _df(spark, 20, 25), stats_cols=["k"])
     assert refs.branch_publish(d, "ok", drop=True, spark=spark) == 3
+
+
+# --- positional deletes and partition specs carried by rollback/branch ---
+
+
+def _pos_deleted_table(spark, tmp_path):
+    """v1 = rows 0..9, v2 = positional delete k>=5 (head rows 0..4),
+    v3 = append 10..19 (head rows 0..4 + 10..19)."""
+    d = str(tmp_path / "t")
+    snap.snapshot_append(spark, d, _df(spark, 0, 10), stats_cols=["k"])
+    snap.snapshot_position_delete(spark, d, "k >= 5")
+    snap.snapshot_append(spark, d, _df(spark, 10, 20), stats_cols=["k"])
+    return d
+
+
+def test_rollback_restores_positional_deletes(spark, tmp_path):
+    d = _pos_deleted_table(spark, tmp_path)
+    v = refs.snapshot_rollback(d, 2)
+    assert v == 4
+    # before the fix: pos_delete_files dropped -> 0..9 resurrected
+    assert _keys(snap.read_snapshot(spark, d)) == [0, 1, 2, 3, 4]
+    assert snap.read_snapshot_meta(d, 4).get("pos_delete_files")
+    # history intact: v3 still shows the pre-rollback content
+    assert _keys(snap.read_snapshot(spark, d, 3)) == [0, 1, 2, 3, 4] + list(
+        range(10, 20)
+    )
+
+
+def test_branch_from_version_with_positional_deletes(spark, tmp_path):
+    d = _pos_deleted_table(spark, tmp_path)
+    refs.branch_create(d, "b", from_version=2)
+    assert _keys(refs.read_branch(spark, d, "b")) == [0, 1, 2, 3, 4]
+
+
+def test_rollback_restores_partition_spec(spark, tmp_path):
+    """partition_by is content too: files restored by a rollback must be
+    read under the spec they were written with."""
+    d = str(tmp_path / "t")
+    pdf = spark.range(0, 10).select(
+        F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("p")
+    )
+    snap.snapshot_append(spark, d, pdf, stats_cols=["k"], partition_by=["p"])
+    snap.snapshot_append(
+        spark,
+        d,
+        spark.range(10, 14).select(F.col("id").alias("k"), F.lit("0").alias("p")),
+        stats_cols=["k"],
+        partition_by=["p"],
+    )
+    refs.snapshot_rollback(d, 1)
+    assert snap.read_snapshot_meta(d, snap.current_version(d)).get("partition_by") == [
+        "p"
+    ]
+    got = snap.read_partitions(spark, d, {"p": "1"})
+    assert _keys(got) == [1, 3, 5, 7, 9]

@@ -192,3 +192,51 @@ def test_chunk_documents_overlap_and_coverage(spark):
     assert "Exchange" not in plan
     with __import__("pytest").raises(ValueError):
         textops.chunk_documents(d, chunk_tokens=16, overlap=16)
+
+
+# --- weighted_hash_sample ---
+
+
+def test_weighted_sample_deterministic_and_capped(spark):
+    df = spark.createDataFrame(
+        [(i, "s" if i % 2 else "t", float(1 + i % 7)) for i in range(400)],
+        ["id", "stratum", "w"],
+    )
+    a = sampling.weighted_hash_sample(df, "id", "w", m=20, strata_col="stratum")
+    b = sampling.weighted_hash_sample(df.repartition(7), "id", "w", m=20, strata_col="stratum")
+    ra = sorted((r["stratum"], r["id"], r["sample_rank"]) for r in a.collect())
+    rb = sorted((r["stratum"], r["id"], r["sample_rank"]) for r in b.collect())
+    assert ra == rb  # partitioning-independent
+    per = {}
+    for s, _, rk in ra:
+        per.setdefault(s, []).append(rk)
+    assert set(per) == {"s", "t"}
+    for ranks in per.values():
+        assert sorted(ranks) == list(range(1, 21))
+
+
+def test_weighted_sample_excludes_nonpositive_weights(spark):
+    df = spark.createDataFrame(
+        [(1, 0.0), (2, -3.0), (3, None), (4, 2.0), (5, 1.0)],
+        ["id", "w"],
+    )
+    out = sampling.weighted_hash_sample(df, "id", "w", m=10)
+    assert sorted(r["id"] for r in out.collect()) == [4, 5]
+
+
+def test_weighted_sample_weight_bias(spark):
+    # A-ES property check: one row with overwhelming weight is all but
+    # guaranteed a top rank; with 1000 draws of weight 1 vs one row of
+    # weight 1e6, the heavy row must be sampled into the top 10.
+    rows = [(i, 1.0) for i in range(1000)] + [(9999, 1e6)]
+    df = spark.createDataFrame(rows, ["id", "w"])
+    out = sampling.weighted_hash_sample(df, "id", "w", m=10)
+    assert 9999 in {r["id"] for r in out.collect()}
+
+
+def test_weighted_sample_salt_redraws(spark):
+    df = spark.createDataFrame([(i, 1.0) for i in range(500)], ["id", "w"])
+    a = {r["id"] for r in sampling.weighted_hash_sample(df, "id", "w", m=50, salt="a").collect()}
+    b = {r["id"] for r in sampling.weighted_hash_sample(df, "id", "w", m=50, salt="b").collect()}
+    assert a != b  # independent draw
+    assert len(a) == len(b) == 50

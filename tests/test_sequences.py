@@ -182,3 +182,57 @@ def test_touch_attribution_first_last_semantics(spark):
         for r in sequences.touch_attribution(ev).collect()
     }
     assert out == {("first", "view"): 2, ("last", "click"): 1, ("last", "email"): 1}
+
+
+# --- interval_history ---
+
+
+def _hist_rows(spark, obs):
+    df = spark.createDataFrame(obs, ["k", "seq", "ts", "status"])
+    out = sequences.interval_history(df, "k", "ts", "status", tiebreak="seq")
+    return sorted(
+        ((r["k"], r["status"], r["valid_from"], r["valid_to"], r["is_current"]) for r in out.collect()),
+        key=lambda t: (t[0], t[1] or "", t[2]),
+    )
+
+
+def test_interval_history_collapses_runs(spark):
+    rows = _hist_rows(
+        spark,
+        [
+            ("c1", 1, 10, "O"),
+            ("c1", 2, 20, "O"),  # same run
+            ("c1", 3, 30, "F"),
+            ("c1", 4, 40, "O"),  # status returns -> NEW run, not merged
+            ("c2", 5, 15, "P"),
+        ],
+    )
+    assert rows == [
+        ("c1", "F", 30, 40, False),
+        ("c1", "O", 10, 30, False),
+        ("c1", "O", 40, None, True),
+        ("c2", "P", 15, None, True),
+    ]
+
+
+def test_interval_history_null_runs_and_guard(spark):
+    rows = _hist_rows(
+        spark,
+        [("k", 1, 1, None), ("k", 2, 2, None), ("k", 3, 3, "A")],
+    )
+    assert rows == [("k", None, 1, 3, False), ("k", "A", 3, None, True)]
+    df = spark.createDataFrame([(1, 2, 3, 4)], ["k", "ts", "a", "_run"])
+    with pytest.raises(ValueError, match="_run"):
+        sequences.interval_history(df, "k", "ts", "a")
+
+
+def test_interval_history_single_shuffle_partitioning(spark):
+    # both windows and the groupBy key on k: exactly two Exchanges total
+    # (observations, runs) and no rangepartitioning anywhere.
+    df = spark.createDataFrame(
+        [("k%d" % (i % 5), i, i * 10, "s%d" % (i % 3)) for i in range(100)],
+        ["k", "seq", "ts", "status"],
+    )
+    out = sequences.interval_history(df, "k", "ts", "status", tiebreak="seq")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan.lower()

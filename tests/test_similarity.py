@@ -13,6 +13,8 @@ meaningless. The meaningful invariants:
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +22,8 @@ from pyspark.sql import functions as F
 from stock_price_prediction_using_stream_and_batch_processing_spark.functions import vectors
 from stock_price_prediction_using_stream_and_batch_processing_spark.operators import similarity
 from stock_price_prediction_using_stream_and_batch_processing_spark.sources.tables import load_table
+
+from .conftest import SF_MED
 
 SF_SMALL = "/root/testdata/sf0.001"
 DIM = 64
@@ -462,7 +466,7 @@ def test_semantic_dedup_target_cell_size_policy(spark):
     assert {r.vec_id for r in rows} == set(range(100))
 
 
-# --- r16: blocked-BLAS exact pair enumeration (threshold_pairs_matrix) ---
+# --- exact all-pairs components (_components) against the fold form ---
 
 
 def _hof_pairs(e, thr):
@@ -476,44 +480,28 @@ def _hof_pairs(e, thr):
     )
 
 
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-def test_threshold_pairs_matrix_parity_with_hof(spark, sf_dir):
-    """The matmul pair set must equal the higher-order-function pair set
-    exactly (the margin argument on the operator's docstring), and the
-    fixture margin that makes the argument valid must actually hold."""
-    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
-    fast = {(r.id_a, r.id_b) for r in similarity.threshold_pairs_matrix(e, 0.4).collect()}
-    slow = {(r.id_a, r.id_b) for r in _hof_pairs(e, 0.4).collect()}
+def _check_components_pairs(e, thr=0.4):
+    """``_components``' pairs over the collected rows must equal the
+    higher-order-function pair set exactly (the margin argument on its
+    docstring), and the fixture margin that makes the argument valid
+    must actually hold: no pair's |cosine - threshold| inside the
+    summation-order rounding band (1e-9 is 1e5x the worst-case band)."""
+    rows = e.select("vec_id", "embedding").collect()
+    ids = np.asarray([r[0] for r in rows])
+    vals = [r[1] for r in rows]
+    _, i, j = similarity._components(ids, vals, thr, "vec_id")
+    fast = {tuple(sorted(p)) for p in zip(ids[i].tolist(), ids[j].tolist())}
+    slow = {(r.id_a, r.id_b) for r in _hof_pairs(e, thr).collect()}
     assert fast == slow and len(fast) > 0
-    # margin: no pair's |cosine - threshold| inside the summation-order
-    # rounding band (1e-9 is 1e5x the worst-case band, see docstring)
-    u = e.select("vec_id", vectors.unit("embedding").alias("_u"))
-    a = u.select(F.col("vec_id").alias("id_a"), F.col("_u").alias("_ua"))
-    b = u.select(F.col("vec_id").alias("id_b"), F.col("_u").alias("_ub"))
-    margin = (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .select(F.abs(vectors.dot("_ua", "_ub") - 0.4).alias("d"))
-        .agg(F.min("d"))
-        .head()[0]
-    )
-    assert margin > 1e-9
+    m = np.asarray(vals, dtype=np.float64)
+    u = m / np.linalg.norm(m, axis=1)[:, None]
+    margin = np.abs((u @ u.T)[np.triu_indices(len(u), 1)] - thr).min()
+    assert margin > 1e-9, margin
 
 
-def test_threshold_pairs_matrix_edges(spark):
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert similarity.threshold_pairs_matrix(empty, 0.5).count() == 0
-
-    with_null = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, None)], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="NULL embedding at vec_id=2"):
-        similarity.threshold_pairs_matrix(with_null, 0.5)
-
-    ragged = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="ragged"):
-        similarity.threshold_pairs_matrix(ragged, 0.5)
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_MED])
+def test_components_pairs_parity_with_hof(spark, sf_dir):
+    _check_components_pairs(load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0))
 
 
 # --- per-cell components kernel (_cell_components) and its reference ---
@@ -572,8 +560,8 @@ def test_cell_threshold_pairs_parity_with_hof_join(spark, sf_dir):
     """The per-cell kernel's components must equal the components of the
     equi-self-join + higher-order-dot pair set it replaced, resolved by
     resolve_components and left-joined back — pinned on the exact cell
-    layout semantic_dedup runs (same margin-vs-rounding-band argument as
-    threshold_pairs_matrix for the pair set inside each cell)."""
+    layout semantic_dedup runs (``_components``' margin-vs-rounding-band
+    argument for the pair set inside each cell)."""
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
     assigned, _ = similarity.ivf_build(e, 64, 16, "embedding", 42, max_iter=8)
     cell = assigned.select("vec_id", "embedding", "_cell").localCheckpoint()
@@ -644,6 +632,15 @@ def test_cell_threshold_pairs_null_and_zero_norm(spark):
     )
     with pytest.raises(Exception, match="zero-norm embedding at vec_id=7"):
         _kernel(z, 0.5).collect()
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>, _cell int")
+    assert _kernel(empty, 0.5).collect() == []
+    labels, i, j = similarity._components(np.asarray([]), [], 0.5, "vec_id")
+    assert len(labels) == len(i) == len(j) == 0
+    # a NULL embedding forms no pair and is its own component
+    labels, i, j = similarity._components(
+        np.asarray([3, 2, 1]), [[1.0, 0.0], None, [1.0, 0.0]], 0.5, "vec_id"
+    )
+    assert labels.tolist() == [1, 2, 1] and (i.tolist(), j.tolist()) == ([0], [2])
     for ids in ("vec_id long", "vec_id string"):
         n = spark.createDataFrame(
             [(None, [1.0, 0.0], 3), ("2" if "string" in ids else 2, [1.0, 0.0], 3)],
@@ -653,45 +650,12 @@ def test_cell_threshold_pairs_null_and_zero_norm(spark):
             _kernel(n, 0.5).collect()
 
 
-def test_threshold_pairs_matrix_zero_norm_raises(spark):
-    """ADVICE r16: a zero-norm embedding must refuse loudly instead of
-    silently dropping its pairs through a NaN mask."""
-    z = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (5, [0.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="zero-norm embedding at vec_id=5"):
-        similarity.threshold_pairs_matrix(z, 0.5)
-
-
-def test_threshold_pairs_matrix_null_id_raises(spark):
-    """A NULL id refuses on the driver naming the id column, for long
-    and string ids alike, instead of dying in the executor's id mask."""
-    for ids, other in (("vec_id long", 2), ("vec_id string", "2")):
-        n = spark.createDataFrame(
-            [(None, [1.0, 0.0]), (other, [1.0, 0.0])], f"{ids}, embedding array<double>"
-        )
-        with pytest.raises(ValueError, match="NULL vec_id"):
-            similarity.threshold_pairs_matrix(n, 0.5)
-
-
-def test_threshold_pairs_margin_sf01():
-    """ADVICE r16: pin the matmul-vs-fold margin argument at sf0.1 —
-    the SF the bench face actually runs — not just the small fixtures.
-    Driver-side numpy replay of the same even-id slice and unit-dot."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        "/root/testdata/sf0.1/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = np.asarray(t.column("vec_id").to_pylist())
-    m = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
-    m = m[ids % 2 == 0]
-    u = m / np.linalg.norm(m, axis=1)[:, None]
-    s = u @ u.T
-    iu = np.triu_indices(len(u), 1)
-    margin = np.abs(s[iu] - 0.4).min()
-    assert margin > 1e-9, margin
+def test_threshold_pairs_margin_sf01(spark):
+    """ADVICE r16: pin the matmul-vs-fold parity and margin at sf0.1 —
+    the SF the bench face actually runs — not just the small fixtures."""
+    sf01 = os.path.join(os.path.dirname(SF_MED), "sf0.1")
+    e = load_table(spark, sf01, "embeddings").filter(F.col("vec_id") % 2 == 0)
+    _check_components_pairs(e)
 
 
 def test_cell_threshold_pairs_ragged_raises(spark):
@@ -739,8 +703,8 @@ def test_nearest_cell_expr_parity_with_per_cell_literals(spark):
 
 
 def test_unit_rows_refusals_name_the_input():
-    """The one refusal helper both pair kernels call keeps the messages
-    the kernel and threshold_pairs_matrix tests above match on, for
+    """The one refusal helper ``_components`` calls keeps the messages
+    the kernel tests above match on, on the driver as in a task, for
     long (NaN once in pandas), object and string ids; NULL embeddings
     are skipped, left to the caller."""
     import pandas as pd

@@ -320,3 +320,43 @@ def test_partition_filter_prunes_deltas_at_metadata_level(spark, tmp_path):
                 "readChangeFeed": "true",
             }
         )
+
+
+# --- boolean partition tokens through the partitionFilter option ---
+
+
+def test_boolean_partition_filter_streaming_source(spark, tmp_path):
+    """Same rendering through the streaming CDC source's
+    partitionFilter option (JSON booleans)."""
+    import json
+
+    d = str(tmp_path / "t")
+    ck = str(tmp_path / "ck")
+    out = str(tmp_path / "out")
+    df = spark.range(0, 10).select(
+        F.col("id").alias("k"), (F.col("id") % 2 == 0).alias("even")
+    )
+    snap.snapshot_append(spark, d, df, stats_cols=["k"], partition_by=["even"])
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources.snapshot_source import (
+        register_snapshot_changes,
+    )
+
+    register_snapshot_changes(spark)
+    q = (
+        spark.readStream.format("snapshot_changes")
+        .option("table_dir", d)
+        .option("partitionFilter", json.dumps({"even": True}))
+        .load()
+        .writeStream.format("memory")
+        .queryName("bool_pv_filter")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+    got = sorted(r.k for r in spark.table("bool_pv_filter").collect())
+    assert got == [0, 2, 4, 6, 8]

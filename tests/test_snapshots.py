@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_price_prediction_using_stream_and_batch_processing_spark.operators import snapshots as snap
@@ -1604,3 +1605,103 @@ def test_footer_stats_utf8_byte_bound(spark, tmp_path):
     ).coalesce(1).write.parquet(d2)
     fast = snap._footer_commit_stats(d2, ["s"])
     assert fast is not None and len(fast) == 1
+
+
+# --- update vs concurrent delete commits; boolean partition tokens ---
+
+
+def _df(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+
+
+def _keys(df):
+    return sorted(r.k for r in df.collect())
+
+
+def _race_once(spark, inject):
+    """Monkeypatch-free one-shot race: swap publish_with_rebase for a
+    wrapper that restores the original, runs ``inject`` (which commits
+    normally), then publishes the in-flight commit."""
+    orig = snap.publish_with_rebase
+
+    def wrapper(table_dir, make_snap, max_attempts=50):
+        snap.publish_with_rebase = orig
+        inject()
+        return orig(table_dir, make_snap, max_attempts)
+
+    snap.publish_with_rebase = wrapper
+    return orig
+
+
+def test_update_conflicts_with_concurrent_equality_delete(spark, tmp_path):
+    d = str(tmp_path / "t")
+    snap.snapshot_append(spark, d, _df(spark, 0, 10), stats_cols=["k"])
+
+    orig = _race_once(
+        spark,
+        lambda: snap.snapshot_delete(
+            spark, d, spark.createDataFrame([(2,)], "k long"), "k"
+        ),
+    )
+    try:
+        with pytest.raises(snap.ConcurrentCommitError, match="delete files changed"):
+            snap.snapshot_update(spark, d, "k < 5", {"v": "v + 100"})
+    finally:
+        snap.publish_with_rebase = orig
+    # re-planned against the current version, the update serializes
+    # AFTER the delete: k=2 stays dead, survivors updated
+    snap.snapshot_update(spark, d, "k < 5", {"v": "v + 100"})
+    rows = {r.k: r.v for r in snap.read_snapshot(spark, d).collect()}
+    assert 2 not in rows
+    assert rows[0] == 100 and rows[4] == 108 and rows[9] == 18
+
+
+def test_update_conflicts_with_concurrent_positional_delete(spark, tmp_path):
+    d = str(tmp_path / "t")
+    snap.snapshot_append(spark, d, _df(spark, 0, 10), stats_cols=["k"])
+
+    orig = _race_once(
+        spark, lambda: snap.snapshot_position_delete(spark, d, "k = 7")
+    )
+    try:
+        with pytest.raises(snap.ConcurrentCommitError, match="delete files changed"):
+            snap.snapshot_update(spark, d, "k >= 0", {"v": "v + 100"})
+    finally:
+        snap.publish_with_rebase = orig
+
+
+def test_update_still_commutes_with_concurrent_append(spark, tmp_path):
+    """The new check must not over-refuse: an append changes no delete
+    files, so the update rebases through it as before."""
+    d = str(tmp_path / "t")
+    snap.snapshot_append(spark, d, _df(spark, 0, 5), stats_cols=["k"])
+
+    orig = _race_once(
+        spark,
+        lambda: snap.snapshot_append(spark, d, _df(spark, 100, 103), stats_cols=["k"]),
+    )
+    try:
+        res = snap.snapshot_update(spark, d, "k < 5", {"v": "v + 100"})
+    finally:
+        snap.publish_with_rebase = orig
+    assert res["rows_updated"] == 5
+    rows = {r.k: r.v for r in snap.read_snapshot(spark, d).collect()}
+    assert rows[0] == 100 and rows[100] == 200  # appended rows untouched
+
+
+def test_boolean_partition_filter_matches_hive_tokens(spark, tmp_path):
+    d = str(tmp_path / "t")
+    df = spark.range(0, 10).select(
+        F.col("id").alias("k"), (F.col("id") % 2 == 0).alias("even")
+    )
+    snap.snapshot_append(spark, d, df, stats_cols=["k"], partition_by=["even"])
+    # hive layout wrote "true"/"false"; a Python bool filter must match
+    got = snap.read_partitions(spark, d, {"even": True})
+    assert _keys(got) == [0, 2, 4, 6, 8]
+    got = snap.read_partitions(spark, d, {"even": False})
+    assert _keys(got) == [1, 3, 5, 7, 9]
+    # None renders as the hive NULL sentinel
+    assert snap.hive_value_token(None) == snap._HIVE_NULL
+    assert snap.hive_value_token(True) == "true"

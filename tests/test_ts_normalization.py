@@ -122,3 +122,34 @@ def test_fixture_preflight_accepts_driver_fixtures(spark):
     for name in tables.TABLES:
         tables.load_table(spark, SF_MED, name)
         assert (SF_MED, name) in tables._PREFLIGHTED
+
+
+@pytest.mark.parametrize("skip_preflight", ["0", "1"])
+def test_load_table_infers_schema_once(spark, tmp_path, monkeypatch, skip_preflight):
+    """The first load_table of a table infers its schema (a parquet
+    footer job); later loads of the same (sf_dir, table) pass the
+    memoized schema to the reader and run no Spark job, with or
+    without the fixture preflight."""
+    import uuid
+
+    from stock_price_prediction_using_stream_and_batch_processing_spark.sources import tables
+
+    monkeypatch.setenv("SPARK_GRAFT_SKIP_PREFLIGHT", skip_preflight)
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "o_orderkey long, o_comment string"
+    ).write.parquet(os.path.join(sf, "orders.parquet"))
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for _ in range(2):
+            group = f"load_table_{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "load_table")
+            df = tables.load_table(spark, sf, "orders")
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[0] >= 1 and jobs[1] == 0, jobs
+    assert df.schema == tables._SCHEMAS[(sf, "orders")]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]

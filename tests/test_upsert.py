@@ -88,3 +88,30 @@ def test_snapshot_diff_complex_types(spark):
     m_old = spark.createDataFrame([(1, {"x": 1})], "k long, m map<string,int>")
     with pytest.raises(ValueError, match="map"):
         snapshot_diff(m_old, m_old, ["k"])
+
+
+# --- snapshot_diff classification ---
+
+
+def test_snapshot_diff_classifies(spark):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators.upsert import snapshot_diff
+
+    old = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], ["k", "s", "v"]
+    )
+    new = spark.createDataFrame(
+        [(2, "b", 2.0), (3, "CHANGED", 3.0), (4, "d", 4.0)], ["k", "s", "v"]
+    )
+    out = {r["k"]: r["change_type"] for r in snapshot_diff(old, new, ["k"]).collect()}
+    assert out == {1: "removed", 3: "changed", 4: "added"}  # 2 unchanged -> absent
+
+
+def test_snapshot_diff_null_vs_empty_and_drift(spark):
+    from stock_price_prediction_using_stream_and_batch_processing_spark.operators.upsert import snapshot_diff
+
+    old = spark.createDataFrame([(1, None)], "k long, s string")
+    new = spark.createDataFrame([(1, "")], "k long, s string")
+    assert [r["change_type"] for r in snapshot_diff(old, new, ["k"]).collect()] == ["changed"]
+    drifted = spark.createDataFrame([(1, "", 0.0)], ["k", "s", "extra"])
+    with pytest.raises(ValueError, match="extra"):
+        snapshot_diff(old, drifted, ["k"])
